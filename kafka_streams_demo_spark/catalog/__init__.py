@@ -124,353 +124,7 @@ ORACLE_CASTS: dict[str, dict[str, str]] = {
 # full catalog stays registered and is locally oracle-checked every round
 # (tools/check_oracle.py → the committed LOCAL_CORRECTNESS artifact), so
 # demoted entries remain externally auditable.
-#
-# Round-4 rotation (each demoted row was driver-GREEN in r3 and keeps a
-# green family sibling in the window): filter_not_low→filter_events,
-# map_rekey→select_key_prefix (both re-key stateless transforms),
-# flat_map_pairs→word_count (flatMap/flatMapValues), stream_stream_outer/
-# stream_table_left/table_table_outer → their inner+left siblings,
-# tumbling_window_sum_cents→tumbling_window_count + aggregate_sum_cents
-# (window frame and SUM-typed agg each stay covered), ann_topk_int8→
-# ann_ivf_topk. Promoted in their place, one per r3-unverified family:
-# q6_forecast_revenue + q21_waiting_supplier (TPC-H adapted shapes beyond
-# q1/q3/q5/q17), asof_join_purchase (as-of join), cogroup_user_metrics
-# (KIP-150 cogroup), contamination_check_bloom (Bloom prefilter),
-# sessionize_gap (gap sessionization), mixture_sample + doc_chunk_overlap
-# (training-data assembly).
-#
-# Earlier demotions (rounds 2-3, unchanged): branch_s/branch_default
-# (siblings of branch_c), hopping_window_count (sibling of tumbling/
-# session), count_distinct_types / distinct_pairs /
-# set_ops_intersect_except (sibling extension ops), and the probabilistic
-# no-oracle rows approx_distinct_users / minhash_lsh_pairs / simhash_pairs
-# (historical: all three have since earned oracles — calibration gate in
-# r11 for the first, exact-pair-set gate in r11 for minhash, and the
-# full md5-signature CTE replay in r12 for simhash).
-#
-# Round-5 rotation (VERDICT r4 tasks #1 + #3): the 12 pre-declared r4
-# additions (avro_wire_roundtrip, ktable_fk_join, sliding_window_count +
-# _bucketed, sessionize_gap_bucketed, running_sum_per_user_bucketed,
-# top3_orders_per_cust_salted, stream_stream_join_asymmetric,
-# dedup_stream_watermark, median_value_per_type, char_entropy,
-# ann_lsh_topk) plus the 5 riskiest never-driver-checked TPC-H
-# decorrelations (q2_min_cost_supplier, q9_product_profit, q13_custdist,
-# q15_top_supplier, q20_excess_shippers) are promoted. The 17 demoted
-# rows were all driver-GREEN in r4 and each keeps a green family sibling
-# in the window: avro_roundtrip→avro_wire_roundtrip (wire = header +
-# same serde), sessionize_gap→sessionize_gap_bucketed (same oracle),
-# table_table_left_join + stream_stream_left_join_window → their inner
-# siblings + stream_stream_join_asymmetric, ktable_tombstone +
-# ktable_groupby_count → ktable_latest + ktable_reduce_sum, reduce_max →
-# aggregate_sum_cents (custom-agg family), merge_streams / top_k_spenders
-# (→ top3_orders_per_cust_salted) / windowed_key_render / peek_passthrough
-# / orders_per_nation (judge-suggested demotions), token_counts +
-# winnow_fingerprints → lang_id + pii_redact + char_entropy (text family),
-# ngram_jaccard_pairs → dedup_exact + dedup_clusters +
-# dedup_stream_watermark (dedup family), q3 + q5 → q1/q2/q6/q9/q13/q15/
-# q17/q20/q21 (TPC-H family, still bench-timed every round).
-#
-# Round-6 rotation candidates (registered + locally hash-verified in r5,
-# awaiting a driver slot): sliding_window_full_count(_bucketed) — the
-# full KIP-450 window set, new this round; pack_sequences_strid
-# (hash-sharded string ids, new); paragraph_dedup_rebuild (CCNet-style
-# corpus paragraph dedup + rebuild, new); bm25_search (lexical
-# retrieval, new); contamination_overlap_pairs (pair-level drop-list,
-# new); dedup_exact_incremental + mixture_upsample (index+delta exact
-# dedup, epoch upsampling — new); temperature_mixture (rate floor, new
-# oracle); jpeg_decode_meta (the from-scratch T.81 entropy-coded tier,
-# new) + gif_decode_meta (r4's codec tier, never driver-checked); the
-# remaining TPC-H shapes q4/q7/q8/q10/q11/q12/q14/q16/q18/q19/q22; and
-# the r5 demotions can rotate back in as slots free up.
-# (minhash_lsh_incremental is rows-only by design — its gate is the
-# bit-equality property test against the batch run.)
-#
-# Round-6 rotation (VERDICT r5 tasks #1 + #3): ALL pre-declared r6
-# candidates promoted (sliding_window_full_count + _bucketed,
-# paragraph_dedup_rebuild, bm25_search, contamination_overlap_pairs,
-# dedup_exact_incremental, mixture_upsample, temperature_mixture,
-# pack_sequences_strid, jpeg_decode_meta, gif_decode_meta), the four
-# round-6 additions (bm25_search_multi, hybrid_rrf_fusion,
-# jpeg_decode_subsampled, pipeline_ingest_incremental), and ALL 11
-# never-driver-checked TPC-H shapes (q4/q7/q8/q10/q11/q12/q14/q16/q18/
-# q19/q22 — task #3 asked ≥6; all fit). The 26 demoted rows were each
-# driver-GREEN in r5 or earlier and keep a green family sibling in the
-# window: filter_events→branch_c (predicate routing),
-# map_values_upper + select_key_prefix→word_count (stateless transform /
-# re-key), session_window_count→sessionize-family semantics via
-# tumbling_window_count + the gap logic inside dedup/sessionize pytest
-# plus r5 green on record, sliding_window_count + _bucketed→
-# sliding_window_full_count + _bucketed (the strictly-larger KIP-450
-# set, same-oracle family), stream_stream_join_window→
-# stream_stream_join_asymmetric (windowed stream-join),
-# table_table_join_inner→ktable_fk_join + ktable_reduce_sum (KTable
-# family), wav_decode_meta→jpeg_decode_meta + jpeg_decode_subsampled +
-# gif_decode_meta (codec ladder), q2/q6/q9/q13/q15/q17/q20/q21→the 11
-# promoted TPC-H shapes + q1 (family stays 12-deep in-window),
-# dedup_exact→dedup_exact_incremental + pipeline_ingest_incremental
-# (exact-dedup family, strictly stronger), dedup_stream_watermark→
-# dedup_clusters + pipeline_ingest_incremental (dedup family),
-# pii_redact→lang_id + char_entropy (text family), ann_lsh_topk→
-# ann_ivf_topk + hybrid_rrf_fusion (ANN family), pack_sequences→
-# pack_sequences_strid (superset), contamination_check_bloom→
-# contamination_overlap_pairs (decontamination family),
-# sessionize_gap_bucketed + running_sum_per_user_bucketed→
-# top3_orders_per_cust_salted (skew-tools family, hash-gate pattern),
-# mixture_sample→mixture_upsample + temperature_mixture (mixture
-# family). Late-round swaps for the two newest entries: count_by_key→
-# aggregate_sum_cents + ktable_reduce_sum + cogroup_user_metrics
-# (aggregation family, green since r1) frees a slot for
-# hybrid_rrf_fusion_multi; doc_chunk_overlap→pack_sequences_strid
-# (packing/chunking family, green r5) frees one for
-# bm25_search_postings (same-oracle as bm25_search_multi — a driver
-# green externally proves the persisted-index path bit-equal).
-#
-# Round-7 rotation (VERDICT r6 task #1): ALL pre-declared r7
-# candidates promoted — the five late-r6 additions
-# (ngram_jaccard_incremental, dedup_embedding_cosine_incremental,
-# shuffle_shards, gopher_quality_filter, c4_line_clean), the five
-# named in the verdict (gopher_repetition_filter — now LINEARIZED,
-# pipeline_clean_corpus, funnel_conversion, retention_cohorts,
-# ngram_span_dedup), all ten never-driver-checked oracled entries
-# (gif_frames_meta, ppm_frames_meta — the verdict's
-# 'ppm_resize_images' by its registered name — tfidf_top_terms,
-# corpus_profile, vocab_token_freq, winnow_fingerprints,
-# salted_count_skew, hopping_window_sum_cents, q3_shipping_priority,
-# q5_regional_revenue), and the four round-7 additions
-# (ann_ivf_index_topk + ann_ivf_assign_incremental — the persisted
-# IVF tier, the former same-oracle as ann_ivf_topk which STAYS
-# in-window so the hash gate proves the pair bit-equal externally;
-# ngram_span_dedup_hashed — same-oracle as ngram_span_dedup, also
-# kept in-window, proving the md5-keyed plan; jpeg_meta_progressive).
-# The 25 demoted rows were each driver-GREEN in r6 and keep a green
-# family sibling in-window: q4/q7/q8/q10/q11/q12/q14/q16/q19/q22→
-# q1_pricing_summary + q18_large_orders + incoming q3/q5 (TPC-H
-# family, all 22 shapes driver-green on record after this round),
-# sliding_window_full_count_bucketed→sliding_window_full_count
-# (same-oracle pair already externally proven r6),
-# hybrid_rrf_fusion_multi→hybrid_rrf_fusion, bm25_search +
-# bm25_search_postings→bm25_search_multi (retrieval family; the
-# postings bit-equality was externally proven r6),
-# jpeg_decode_meta→jpeg_decode_subsampled + jpeg_meta_progressive,
-# gif_decode_meta→gif_frames_meta (strictly stronger: per-frame LZW),
-# mixture_upsample + temperature_mixture→pack_sequences_strid +
-# mixture-family r6 greens on record, dedup_exact_incremental→
-# pipeline_ingest_incremental (superset) + the two incoming
-# incremental families, char_entropy + lang_id→corpus_profile +
-# tfidf_top_terms + vocab_token_freq (text-analysis family),
-# contamination_overlap_pairs→winnow_fingerprints (fingerprint/
-# decontamination family; r6 green on record),
-# top3_orders_per_cust_salted + median_value_per_type→
-# salted_count_skew (skew family). Late-round-7 swaps for the four
-# newest entries (each individually hash-verified at sf0.01 before the
-# swap): paragraph_dedup_rebuild (r6 green; dedup family stays 6-deep
-# in-window)→dedup_clusters_incremental (same-oracle as dedup_clusters
-# — a driver green proves batch ≡ incremental externally);
-# pipeline_clean_corpus (locally green; its whole stack is the front
-# half of the successor)→pipeline_training_data (strict superset:
-# clean → pack → shard with the full recursive oracle);
-# ppm_frames_meta (r4-green family sibling wav_decode_meta on record,
-# gif_frames_meta stays in-window)→jpeg_decode_restart (the DRI/RSTn
-# resync path under the hash gate).
-#
-# Round-8 rotation candidates (all locally hash-green, awaiting a
-# driver slot): pipeline_clean_corpus, ppm_frames_meta,
-# paragraph_dedup_rebuild rotate back as slots free; never-driver-
-# checked oracled entries: sample_per_source, ngram_jaccard_pairs,
-# dedup_exact_incremental's r6-green siblings (q4/q7/q8/q10-q22 TPC-H
-# rotate back), simhash-family and token-analysis entries
-# (token_counts, repetition_ratio, pii_redact, tfidf variants), plus
-# the late-round-7 additions (all locally hash-green with full oracles
-# unless noted): event_paths_topk (transition mining),
-# jpeg_decode_all_layouts (five-way layout corpus, supersedes
-# jpeg_decode_subsampled's coverage), pipeline_training_data's
-# front-half sibling pipeline_clean_corpus, and the rows-only BPE pair
-# (bpe_train_merges / bpe_token_counts — worked-example + reference-
-# trainer pinned). Additional round-8 candidates from the final r7
-# session (each hash-verified at sf0.01 on landing): the LM/curation
-# tier (ccnet_perplexity + _incremental, dsir_select,
-# domain_cap_sample, token_drift_kl, pipeline_quality_curation), the
-# linkage/layout/range tier (fuzzy_pairs_part_names, zorder_layout,
-# band_join_error_purchase), the substring-search trio
-# (substring_search_index / _incremental / _rarest),
-# bm25_postings_incremental, and the newest additions whose family
-# siblings hold this round's window slots: cms_sketch_users +
-# cms_point_queries + hll_distinct_users (sketch estimates),
-# scd2_current_view, exact_percentiles_value,
-# unpivot_charge_components, weighted_sample_quality +
-# weighted_sample_per_source, tfidf_doc_pairs, clustering_coefficient
-# (composes the in-window triangle census), hll_distinct_by_type (the
-# grouped-sketch estimate), scd2_asof_enrich (the history-table lookup
-# whose SCD2 build holds a window slot), shard_manifest,
-# curriculum_phases, moving_avg_per_user, robust_zscore_outliers, plus
-# ngram_span_dedup_hashed and vocab_token_freq rotating back in.
-# Keep the standing rule: no family loses its
-# last green representative; document every swap here.
-#
-# Late-round-7 swaps for the sketch / SCD2 / graph additions (every
-# incoming entry individually hash-verified at sf0.01 before the swap;
-# the whole 50-name window re-verified with check_oracle after it).
-# Eight demotions, each with its family anchor staying green in-window:
-# q18_large_orders (r6 green; TPC-H keeps q1 green + q3/q5 incoming),
-# tumbling_window_count (r1-r6 green; windows keep
-# sliding_window_full_count green + hopping_window_sum_cents incoming),
-# ktable_reduce_sum (r6 green; KTable family keeps ktable_latest +
-# ktable_fk_join green), dedup_clusters (r6 green; its SAME-ORACLE
-# sibling dedup_clusters_incremental stays in-window, so the cluster
-# logic still earns an external row), hybrid_rrf_fusion (r6 green;
-# retrieval keeps bm25_search_multi green), cogroup_user_metrics (r6
-# green; agg family keeps word_count + aggregate_sum_cents green),
-# ngram_span_dedup_hashed (never-checked; plain ngram_span_dedup stays
-# — the md5-keyed pair proof rotates back r8), vocab_token_freq
-# (never-checked; text-analysis keeps tfidf_top_terms + corpus_profile
-# incoming, lang_id/char_entropy green on record). Eight additions:
-# the HLL pair (hll_registers_users + hll_merge_incremental — shared
-# oracle, a green on both proves merge == rebuild externally),
-# cms_merge_incremental (same-oracle vs cms_sketch_users, which stays
-# local this round), the SCD2 pair (scd2_user_history +
-# scd2_merge_incremental — shared oracle, lakehouse MERGE ≡ rebuild),
-# the triangle pair (triangle_counts_coorder +
-# triangle_counts_incremental — shared oracle, index+delta graph
-# maintenance), and pagerank_cust_supp (iterative double-valued
-# algorithm under the unrolled-CTE hash gate).
-# ROUND-8 ROTATION (the big never-checked sweep): VERDICT r7 task 1
-# asks that the ~25 late-r7 entries that have never earned an external
-# CORRECTNESS row rotate in. 31 demotions — every one driver-green in
-# CORRECTNESS_r07.json, so every demoted family keeps a green ON RECORD,
-# and each §2 family keeps an in-window anchor: aggregate_sum_cents /
-# hopping_window_sum_cents / stream_stream_join_asymmetric /
-# ktable_fk_join / event_time_extract / q3+q5 / cogroup-tier (word_count
-# + q1 + sliding_window_full_count + stream_table_join_segment +
-# asof_join_purchase stay), dedup incrementals (pipeline_ingest_
-# incremental + ngram_span_dedup stay; _hashed pair-proof rotates IN),
-# cleaning bundles (the LM/curation tier rotates IN: ccnet_perplexity
-# (+_incremental), dsir_select, domain_cap_sample, token_drift_kl,
-# pipeline_quality_curation), retrieval (bm25_search_multi stays;
-# bm25_postings_incremental rotates IN), ANN (ann_ivf_topk stays),
-# text-analysis (token_drift_kl in; tfidf_top_terms/corpus_profile/
-# winnow_fingerprints green r7 on record), packing/sharding
-# (shard_manifest + curriculum_phases + weighted_sample pair rotate IN
-# for pack_sequences_strid/shuffle_shards), analytics (moving_avg_per_
-# user + robust_zscore_outliers + unpivot_charge_components +
-# event_paths_topk rotate IN for funnel/retention/salted), sketches
-# (hll_registers_users stays; the never-checked KMV triad +
-# kmv_jaccard + hll_distinct_by_type rotate IN for hll/cms_merge_
-# incremental), SCD2 (scd2_user_history + scd2_merge_incremental stay —
-# merge path changed this round, must re-earn green; finishers
-# scd2_asof_enrich / scd2_compact_retention / scd2_current_view rotate
-# IN), graph (triangle_counts_coorder + pagerank_cust_supp stay —
-# pagerank iteration changed this round; clustering_coefficient rotates
-# IN composing the census; scd2_current_view stays out — 50-slot limit,
-# its filter logic is subsumed by the in-window SCD2 oracles and it is
-# green in the full local sweep), linkage/layout/range tier rotates IN
-# (fuzzy_pairs_part_names, zorder_layout — bucket formula changed this
-# round, band_join_error_purchase), substring-search trio rotates IN,
-# codecs (jpeg_decode_subsampled anchors; progressive/restart/gif green
-# r7 on record). Whole 50-name window re-verified with check_oracle at
-# sf0.01 before commit (standing rule).
-# ROUND-9 ROTATION (VERDICT r8 task 1 — the never-checked sweep, part
-# 2): 42 of the 50 slots go to entries that have NEVER earned an
-# external CORRECTNESS row (54 such oracled entries existed after r8;
-# the remaining 12 stay local-sweep-verified and queue for r10). All
-# 42 demotions are driver-green in CORRECTNESS_r08.json, so every
-# demoted family keeps a green ON RECORD. Eight anchors stay: six §2
-# family representatives (word_count — stateless/grouping/scalar-fn
-# chain; q1_pricing_summary — TPC-H agg; ktable_latest — KTable;
-# stream_table_join_segment — the flagship join;
-# processor_running_count — Processor API through real streaming;
-# avro_wire_roundtrip — serde), plus the two whose code paths CHANGED
-# this round and must re-earn green (ann_ivf_topk — ivf_assign grew
-# the literal/Arrow dispatch; zorder_layout — hybrid bucket formula,
-# oracle regenerated in lockstep). The PQ seven + semdedup pair +
-# hilbert/compaction/recall-report also changed or landed this round
-# and rotate IN, never having been driver-checked. §2 family coverage
-# among incomers: joins add asof_join_purchase_1h + the semi/anti
-# pair; windows add session_window_sum_cents; SCD2 adds
-# scd2_current_view; sketches add the CMS pair + hll_distinct_users +
-# kmv_overlap_event_types; analytics adds rollup/cube/pivot/top-k/
-# funnel/journey/gapfill/corr/percentiles; codecs add
-# jpeg_decode_all_layouts. Whole 50-name window re-verified with
-# check_oracle at sf0.01 before commit (standing rule).
-# ROUND-10 ROTATION (VERDICT r9 task 1 — the never-checked sweep,
-# FINAL part): the 18 remaining oracled entries that have never earned
-# an external CORRECTNESS row rotate IN (the quantile-sketch quartet’s
-# three oracled members, contamination_semantic, hilbert_nd_layout,
-# content_manifest_by_source, and the engine-completeness tail queued
-# in the r9 comment below) — after this window goes green, ZERO oracled
-# entries remain without an external hash-green row on record. Also IN:
-# compaction_roundtrip (NEW this round — the plan→apply→manifest
-# OPTIMIZE loop, never checked), the four NEW round-10 entries
-# (quality_classifier_filter — GPT-3-style NB quality classifier +
-# derandomized Pareto keep; split_leakage_safe — cluster-keyed
-# train/valid split; token_budget_select — budgeted assembly via the
-# bucketed prefix scan; corr_qty_price, hilbert_layout and
-# kmv_overlap_event_types demote to make room, all D9-green with their
-# families still represented),
-# and four changed-path re-earners
-# (ann_ivf_topk + pq_encode_corpus + ann_ivf_pq_topk: the Arrow
-# assign/encode kernels moved to explicit SparkContext.broadcast with a
-# wrong-length-mask fix this round; compaction_plan: sibling of the
-# compaction_apply refuse-loudly change, plus the r9 bench-noise watch).
-# The 6 standing §2 anchors stay. The remaining 21 slots keep one
-# D9-green representative per §2/LLM family: joins
-# (asof_join_purchase_1h, orders_high_value_semi), windows
-# (session_window_sum_cents), SCD2 (scd2_current_view), sketches
-# (cms_point_queries, hll_distinct_users, kmv_overlap_event_types),
-# dedup/curation (semdedup_cells, dedup_embedding_cosine,
-# pipeline_clean_corpus, contamination_check, quality_score, pii_scan),
-# codecs (jpeg_decode_all_layouts), analytics (rollup_revenue,
-# top3_orders_per_cust, funnel_signup_click_purchase,
-# daily_rollup_gapfill, corr_qty_price), layout (zorder_layout,
-# hilbert_layout). Every demoted entry is driver-green in
-# CORRECTNESS_r09.json or earlier, so each family keeps a green ON
-# RECORD. Whole 50-name window re-verified with check_oracle at sf0.01
-# before commit (standing rule).
-# ROUND-11 ROTATION (VERDICT r10 tasks 1/3/4/5/7/8): every entry that is
-# NEW or whose output/oracle CHANGED this round rotates IN and must earn
-# an external green —
-#   task 1: embedding_quantize_int8 (qvec now serialized — the r10 red);
-#   task 3: the ten formerly rows-only entries that gained oracles
-#     (ann_topk_arrow, minhash_lsh_pairs + _incremental,
-#     approx_distinct_users, approx_percentile_value, ivf_train_kmeans,
-#     pq_codebooks_refined, multimodal_frames/_features/_resize — the
-#     last three unchanged Spark-side, the sketch/iterative five
-#     reshaped to calibration/invariant projections);
-#   task 4: split_leakage_safe_indexed (stored-assignments split, same
-#     oracle as the recompute entry);
-#   task 5: triangle_census_powerlaw + _incremental (the power-law
-#     fixture census pair);
-#   task 7: bm25_bulk_direct + bm25_bulk_postings (the bulk-query
-#     crossover pair, same-oracle) + bm25_bulk_pruned (exact MaxScore
-#     pruning, same-oracle — pq_encode_corpus demotes to make room, PQ
-#     family still holds ann_ivf_pq_topk + pq_codebooks_refined);
-#   task 8: wallclock_punctuated_drive (ProcessingTimeTimeout punctuator
-#     through the gate);
-#   plus quality_classifier_incremental — its _nb_score_with_model path
-#     changed (bc localCheckpoint + unseen-bucket smoothing), so it
-#     re-earns even though outputs are bit-identical on covered buckets.
-# The r10 never-checked sweep (quantile quartet, contamination_semantic,
-# hilbert_nd_layout, content_manifest_by_source, fingerprint_bow,
-# histogram/interarrival/multimodal_meta/ppm/percentile/repetition/
-# running_sum/sample/set_ops tail) all went green in CORRECTNESS_r10 and
-# demotes. The 6 standing §2 anchors stay; the remaining 26 slots keep
-# one D10-green representative per §2/LLM family (ann_topk_bruteforce's
-# family is covered by the arrow sibling sharing its oracle). Whole
-# 50-name window re-verified with check_oracle at sf0.01 before commit
-# (standing rule).
-# Round 13 (VERDICT r12 task 5): the window is now BUILT FROM
-# tools/window_staleness.py — per-entry last-external-green round vs
-# line-level last-touch commit (blame -M -C through the r10 package
-# split). All 44 stale entries (touched after their last external
-# green, mostly r4-r9 greens predating the r10 split's mechanical
-# relocation — line-level blame clears the rest of the catalog) take
-# the head, then this round's changed-oracle/changed-path entries
-# (the BPE pair's oracle gained the U+001F error() guard, the
-# punctuator drive's settle loop was rewritten on recentProgress,
-# ivf_train_kmeans appears in both sets via its docstring touch),
-# then 3 standing anchors (word_count, q1, the flagship entry()).
-# Whole 50-name window re-verified with check_oracle at sf0.01 before
-# commit (standing rule). Everything demoted is cumulatively
-# hash-green with code untouched since (WINDOW_STALENESS_r13.json).
+# The window is built by tools/window_staleness.py.
 DRIVER_PRIORITY: list[str] = [
     # stale: externally green r4-r6, lines touched since
     "ngram_jaccard_pairs", "token_counts",

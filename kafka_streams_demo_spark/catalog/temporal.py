@@ -2046,7 +2046,7 @@ def _gopher_rep_sql() -> str:
     """Generated oracle for gopher_repetition: one n-gram CTE block per n
     (2..10) replaying the cnt·10⁵+charlen encoding and the char-coverage
     approximation exactly (same pattern as the generated LSH-plane
-    oracle)."""
+    oracle). NULL text scores as empty text, as in the Spark kernel."""
     from kafka_streams_demo_spark.functions.text import (
         GOPHER_DUP_NGRAM_LIMITS,
         GOPHER_TOP_NGRAM_LIMITS,
@@ -2054,8 +2054,9 @@ def _gopher_rep_sql() -> str:
 
     ns = sorted(set(GOPHER_TOP_NGRAM_LIMITS) | set(GOPHER_DUP_NGRAM_LIMITS))
     ctes = [
+        "docs AS (SELECT doc_id, coalesce(text, '') AS text FROM documents)",
         "toks AS (SELECT doc_id, len(text) AS tc, "
-        "list_filter(string_split(text, ' '), x -> x <> '') AS w FROM documents)",
+        "list_filter(string_split(text, ' '), x -> x <> '') AS w FROM docs)",
         "lm AS (SELECT doc_id, "
         "ROUND(CASE WHEN len(ls) = 0 THEN 0 ELSE "
         "(len(ls) - len(list_distinct(ls)))::DOUBLE / len(ls) END, 6) "
@@ -2065,7 +2066,7 @@ def _gopher_rep_sql() -> str:
         "len(list_filter(ls, x -> x = l)) > 1 THEN len(l) ELSE 0 END))::DOUBLE "
         "/ len(text) END), 6) AS dup_line_char_frac "
         "FROM (SELECT doc_id, text, string_split(text, chr(10)) AS ls "
-        "FROM documents))",
+        "FROM docs))",
     ]
     for n in ns:
         cat = " || '_' || ".join(f"w[i+{j}]" for j in range(n))
@@ -2118,9 +2119,8 @@ def gopher_repetition_filter_q(spark, sf_dir):
     completing the quality+repetition bundle: duplicate-line fraction
     and char fraction, top-{2,3,4}-gram char fraction, duplicated-
     {5..10}-gram char fraction, each against the paper's limit, plus
-    the composite keep. Entirely row-local HOF math (per-n gram arrays
-    projected before the in-array counting, per the HOF re-evaluation
-    rule); the oracle is generated per n from the same limits table."""
+    the composite keep. One row-local Arrow pass; the oracle is
+    generated per n from the same limits table."""
     from kafka_streams_demo_spark.functions.text import gopher_repetition
 
     return gopher_repetition(load_table(spark, "documents", sf_dir))

@@ -14,8 +14,11 @@ DataFrame (doc_id, text):
 - **SimHash**: 64-bit signature; near-dup = Hamming ≤ k, candidates via
   4×16-bit segment index (pigeonhole: Hamming ≤ 3 ⇒ ≥1 equal segment).
 
-All signature math is native column expressions (xxhash64 / bit ops /
-higher-order functions) — no Python in the per-row path.
+Shingling, banding, segment joins and verification are native column
+expressions. The per-row signature math (MinHash, SimHash) and the
+within-block embedding cosine run in numpy over Arrow batches
+(``mapInPandas`` / ``applyInPandas``), one implementation per kernel,
+each tested against an independent reference.
 
 Caching contract: ``minhash_lsh_pairs`` and ``simhash_pairs`` persist one
 small intermediate each (the candidate pair list / the 1-long-per-doc
@@ -118,9 +121,9 @@ def release_caches() -> int:
 
 # MinHash permutation family: h_i(x) = (a_i·x + b_i) mod P over the 31-bit
 # prehash x = xxhash64(shingle) & 0x7FFFFFFF. One string hash per shingle,
-# then 64 multiply-mods — vs 64 full string hashes (measured 1.5× native;
-# enables the 4× Arrow path). a·x < 2^62 so the arithmetic never overflows
-# a signed 64-bit long (ANSI-mode safe) and is bit-identical in numpy int64.
+# then 64 multiply-mods — vs 64 full string hashes (measured 1.5×).
+# a·x < 2^62 so the arithmetic never overflows a signed 64-bit long
+# (ANSI-mode safe) and is bit-identical in numpy int64.
 MERSENNE_P = 2147483647  # 2^31 - 1
 UH_SEED = 42
 
@@ -300,7 +303,7 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame
     """64 minhashes per doc in ONE aggregation pass (64 min() aggregates
     over the universal-hash family — map-side combine keeps the shuffle at
     |docs| × 64 longs regardless of corpus size). Values identical to the
-    per-row formulations in minhash_sig_array."""
+    per-row signatures of minhash_sig_array."""
     x = F.xxhash64(F.col("s")).bitwiseAND(F.lit(0x7FFFFFFF))
     aggs = [
         F.min(F.pmod(F.lit(a) * x + F.lit(b), F.lit(MERSENNE_P))).alias(f"h{i}")
@@ -309,39 +312,21 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_sig_array(
-    ds: DataFrame, num_hashes: int = NUM_HASHES, impl: str = "arrow"
-) -> DataFrame:
+def minhash_sig_array(ds: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
     """(doc_id, sig) — the MinHash signature as an array<long> column, from
-    (doc_id, shset) row-local shingle sets. Shuffle-free either way.
+    (doc_id, shset) row-local shingle sets. Shuffle-free.
 
-    impl='arrow': prehash natively, then one numpy broadcast
-    ``min((A·x + B) mod P)`` per doc over Arrow batches — measured 4×
-    faster than the interpreted HOF chain at sf0.1 (0.7 s vs 2.4 s vs
-    3.7 s for the old 64×xxhash64). Python workers scale per-core next to
-    the JVM, so the ratio holds on a real cluster.
-    impl='native': same values via higher-order functions only (no Python
-    runtime in the plan) — the fallback where Python workers are
-    undesirable. Both produce bit-identical signatures; docs with empty
-    shingle sets get a null/empty signature either way.
+    Prehash natively, then one numpy broadcast ``min((A·x + B) mod P)``
+    per doc over Arrow batches — measured 4× faster than an interpreted
+    higher-order-function chain at sf0.1. Python workers scale per-core
+    next to the JVM, so the ratio holds on a real cluster. Signatures
+    equal ``minhash_signatures`` (tested); docs with an empty shingle set
+    get a null signature.
     """
-    params = _uh_params(num_hashes)
     hs = ds.select(
         "doc_id",
         F.transform("shset", lambda s: F.xxhash64(s).bitwiseAND(F.lit(0x7FFFFFFF))).alias("_sh"),
     )
-    if impl == "native":
-        def _mh(a: int, b: int) -> Column:
-            return F.array_min(
-                F.transform("_sh", lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(MERSENNE_P)))
-            )
-
-        return hs.select(
-            "doc_id",
-            F.when(
-                F.size("_sh") > 0, F.array(*[_mh(a, b) for a, b in params])
-            ).alias("sig"),
-        )
 
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
@@ -434,7 +419,6 @@ def minhash_index(
     docs: DataFrame, n: int = 3,
     num_hashes: int = NUM_HASHES, bands: int = BANDS,
     text_col: str = "text", id_col: str = "doc_id",
-    signature_impl: str = "arrow",
 ) -> DataFrame:
     """The persistable LSH index: (doc_id, band, bucket) rows for a
     corpus — what a production pipeline writes to parquet after each
@@ -444,7 +428,7 @@ def minhash_index(
     different runs compose. Write partitioned/bucketed by ``band`` for
     co-located delta joins."""
     ds = doc_shingle_sets(docs, n, text_col, id_col, spread=True)
-    sig = minhash_sig_array(ds, num_hashes, impl=signature_impl)
+    sig = minhash_sig_array(ds, num_hashes)
     return _band_rows(sig, num_hashes, bands).filter(F.col("bucket").isNotNull())
 
 
@@ -482,7 +466,6 @@ def minhash_lsh_pairs_incremental(
     n: int = 3, threshold: float = 0.8,
     num_hashes: int = NUM_HASHES, bands: int = BANDS,
     text_col: str = "text", id_col: str = "doc_id",
-    signature_impl: str = "arrow",
     max_bucket_size: int = 10_000,
     broadcast_delta: bool = False,
 ) -> DataFrame:
@@ -521,7 +504,7 @@ def minhash_lsh_pairs_incremental(
     # the persisted index anyway, so the materialization is the write
     # that run performs regardless.
     new_banded = minhash_index(
-        new_docs, n, num_hashes, bands, text_col, id_col, signature_impl
+        new_docs, n, num_hashes, bands, text_col, id_col
     ).localCheckpoint(eager=True)
     # the hot-bucket cap counts across index ∪ delta; the union only feeds
     # a partial-combined aggregate, so index ROWS collapse map-side and
@@ -599,7 +582,6 @@ def minhash_lsh_pairs(
     docs: DataFrame, n: int = 3, threshold: float = 0.8,
     num_hashes: int = NUM_HASHES, bands: int = BANDS,
     text_col: str = "text", id_col: str = "doc_id",
-    signature_impl: str = "arrow",
     max_bucket_size: int = 10_000,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs with exact-Jaccard verification.
@@ -624,7 +606,7 @@ def minhash_lsh_pairs(
     # whole shingle+signature chain otherwise runs on the scan's single
     # partition until the bucket groupBy (r13)
     ds = doc_shingle_sets(docs, n, text_col, id_col, spread=True)
-    sig = minhash_sig_array(ds, num_hashes, impl=signature_impl)
+    sig = minhash_sig_array(ds, num_hashes)
     banded = _band_rows(sig, num_hashes, bands)
     # Candidate pairs via bucket grouping, NOT a self-join: a self-join
     # reads the banded table twice, and each side re-runs the whole
@@ -732,17 +714,11 @@ def simhash64(tokens: Column) -> Column:
     return simhash_from_hashes(F.transform(tokens, simhash_token_hash))
 
 
-def simhash_sig(hashed: DataFrame, impl: str = "arrow") -> DataFrame:
-    """(doc_id, sig) from (doc_id, _th token-hash array).
-
-    impl='arrow': numpy bit-matrix majority vote over Arrow batches —
-    measured ~4× over the 64 interpreted bit-vote aggregates (same ratio
-    as the minhash signature stage; see minhash_sig_array).
-    impl='native': the HOF formulation (simhash_from_hashes), no Python
-    runtime in the plan. Bit-identical results (parity test)."""
-    if impl == "native":
-        return hashed.select("doc_id", simhash_from_hashes(F.col("_th")).alias("sig"))
-
+def simhash_sig(hashed: DataFrame) -> DataFrame:
+    """(doc_id, sig) from (doc_id, _th token-hash array): numpy bit-matrix
+    majority vote over Arrow batches — measured ~4× over the 60
+    interpreted bit-vote aggregates of ``simhash_from_hashes``, which it
+    equals bit for bit (tested)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     out_schema = StructType(
@@ -777,7 +753,6 @@ def simhash_sig(hashed: DataFrame, impl: str = "arrow") -> DataFrame:
 def simhash_pairs(
     docs: DataFrame, max_hamming: int = 3,
     text_col: str = "text", id_col: str = "doc_id",
-    signature_impl: str = "arrow",
 ) -> DataFrame:
     """SimHash near-dup pairs: Hamming(sig_i, sig_j) ≤ max_hamming.
     Candidates via 4×16-bit segment equality (pigeonhole for ≤3 bit flips;
@@ -790,8 +765,8 @@ def simhash_pairs(
     ENTIRE pipeline — signature, segments, hamming — replays as one
     DuckDB CTE and the catalog entry is hash-gated (VERDICT r11 task 3).
     Tokens and their hashes are each materialized behind their own
-    projection; the signature stage itself is Arrow-vectorized by default
-    (simhash_sig — bit-identical native fallback available)."""
+    projection; the signature stage itself is Arrow-vectorized
+    (simhash_sig)."""
     # NOT spread (functions/spread.py): the signature table is persisted
     # and everything downstream reads the cache, so the extra exchange
     # cost exceeded the one-pass parallelism gain (0.69 → 0.83 s; r13)
@@ -804,7 +779,7 @@ def simhash_pairs(
     # Persist: the segment self-join reads sigs from both sides; without
     # the cache each side re-runs tokenize→hash→signature over the corpus.
     # One long per doc — negligible storage at any scale.
-    sigs = _track_cache(simhash_sig(hashed, impl=signature_impl).persist())
+    sigs = _track_cache(simhash_sig(hashed).persist())
     segs = sigs.select(
         "doc_id", "sig",
         F.explode(
@@ -927,7 +902,6 @@ def embedding_cosine_pairs(
     id_col: str = "vec_id", vec_col: str = "embedding",
     max_block_size: int | None = 10_000,
     on_oversized: str = "drop",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs: (i < j) within a blocking key whose
     cosine (rounded to 6 dp) clears ``threshold``.
@@ -939,43 +913,21 @@ def embedding_cosine_pairs(
     — a documented lower bound; audit with ``oversized_blocks`` or pass
     ``on_oversized="error"`` to fail loudly instead (see ``_cap_blocks``).
 
-    impl='arrow' (default, r13): whole blocks pair inside one numpy
-    kernel (groupBy block → applyInPandas) instead of a block self-join
-    with an interpreted 64-element HOF fold per pair — the pair ROWS
-    never materialize on the JVM side at all, only survivors return.
-    Bit-identical to the HOF path: the kernel accumulates dot and norm²
+    Whole blocks pair inside one numpy kernel (groupBy block →
+    applyInPandas) — the pair ROWS never materialize on the JVM side at
+    all, only survivors return. The kernel accumulates dot and norm²
     SEQUENTIALLY over dimensions (``acc += A[:,d]·B[:,d]`` — vectorized
-    across pairs, ordered across dims, so every pair's IEEE addition
-    sequence equals the zip_with/aggregate left fold), final rounding +
-    threshold stay in Spark on the raw doubles (the kernel prefilters at
-    threshold − 1e-6, below any value that could round up to clear).
-    Pairs of unequal-length vectors score NULL natively (zip_with pads →
-    NULL sum) — the kernel matches by pairing only within equal-length
-    classes; NULL-element vectors are excluded (NULL cos → filtered),
-    while NaN elements / zero norms emit NaN pairs exactly like the HOF
-    path (Spark orders NaN above the threshold).
-    impl='native': the HOF formulation — no Python runtime in the plan.
-    Parity pinned in tests/test_dedup.py (both impls, boundary cosines).
+    across pairs, ordered across dims), so every pair's IEEE addition
+    sequence equals the left fold of ``embedding_cosine_pairs_incremental``
+    (zip_with/aggregate); final rounding + threshold stay in Spark on the
+    raw doubles (the kernel prefilters at threshold − 1e-6, below any
+    value that could round up to clear). A pair with no defined cosine
+    is not emitted: unequal lengths, a NULL or NaN element, or a zero
+    norm (pandas hands NULL elements over as NaN, and a NaN result
+    returns through Arrow as NULL, which the threshold drops). Pinned in
+    tests/test_dedup.py against a plain-Python fold on boundary cosines.
     """
-    from kafka_streams_demo_spark.functions.similarity import dot, norm
-
     emb = _cap_blocks(emb, block_col, max_block_size, on_oversized)
-    if impl == "native":
-        a = emb.select(
-            F.col(id_col).alias("i"), F.col(block_col).alias("blk"), F.col(vec_col).alias("va")
-        ).select("*", norm(F.col("va")).alias("na"))
-        b = emb.select(
-            F.col(id_col).alias("j"), F.col(block_col).alias("blk"), F.col(vec_col).alias("vb")
-        ).select("*", norm(F.col("vb")).alias("nb"))
-        return (
-            a.join(b, ["blk"])
-            .filter(F.col("i") < F.col("j"))
-            .select(
-                "i", "j",
-                F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6).alias("cos"),
-            )
-            .filter(F.col("cos") >= threshold)
-        )
 
     from pyspark.sql.types import DoubleType, StructField, StructType
 

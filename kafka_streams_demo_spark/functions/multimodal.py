@@ -51,15 +51,6 @@ def attach_binary(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     )
 
 
-def _fake_features(payload: bytes) -> list[float]:
-    """Deterministic stand-in: 16-bin byte histogram, L1-normalized."""
-    hist = [0] * FEATURE_DIM
-    for byte in payload[:4096]:
-        hist[byte % FEATURE_DIM] += 1
-    total = float(sum(hist)) or 1.0
-    return [h / total for h in hist]
-
-
 def decode_features(multimodal: DataFrame, fake: bool = False) -> DataFrame:
     """Decode payloads → feature vectors via mapInPandas (Arrow batches).
 

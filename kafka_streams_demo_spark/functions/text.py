@@ -999,14 +999,14 @@ def _make_gopher_rep_arrow(
     top_limits: dict, dup_limits: dict, enc: int,
     max_dlf: float, max_dlcf: float,
 ):
-    """Factory for the Arrow gopher_repetition kernel (by-value closure
-    for worker safety). Bit-identical to the native HOF path — pinned by
-    a parity test AND by the shared catalog oracle: every signal is a
-    count over DISTINCT grams, so numpy `unique` over id-windows (plus
-    prefix-sum char lengths) replaces string materialization entirely;
-    rounding replays Spark's BigDecimal HALF_UP via `decimal`. Docs
-    whose words contain '_' fall back to joined-string counting per doc
-    (the '_' join makes id-tuples and strings non-bijective there)."""
+    """Factory for the gopher_repetition kernel (by-value closure for
+    worker safety). Pinned against the catalog entry's DuckDB oracle:
+    every signal is a count over DISTINCT grams, so numpy `unique` over
+    id-windows (plus prefix-sum char lengths) replaces string
+    materialization entirely; rounding replays Spark's BigDecimal
+    HALF_UP via `decimal`. Docs whose words contain '_' fall back to
+    joined-string counting per doc (the '_' join makes id-tuples and
+    strings non-bijective there)."""
 
     def run(it):
         from collections import Counter
@@ -1114,7 +1114,6 @@ def gopher_repetition(
     text_col: str = "text",
     max_dup_line_frac: float = 0.30,
     max_dup_line_char_frac: float = 0.20,
-    impl: str = "arrow",
 ):
     """The repetition half of the published Gopher filter table (Rae et
     al. 2021, Appendix A1.2), completing ``gopher_quality``: fraction of
@@ -1127,167 +1126,36 @@ def gopher_repetition(
     identically in the oracle). Top-gram tie-break: (count, charlen)
     lexicographic max, engine-deterministic via the cnt·10⁵+len integer
     encoding (charlen clamped to 10⁵−1 so a pathological gram cannot wrap
-    into the count field). Output: all signal columns (6-dp) +
-    composite ``keep``.
+    into the count field). NULL text scores like empty text. Output: all
+    signal columns (6-dp) + composite ``keep``.
 
-    100 TB design: entirely row-local higher-order expressions, and
-    LINEAR per document: each per-n gram array is sorted once, run
-    starts are found by one indexed O(L) pass (``run_starts``), and per-
-    gram counts fall out of consecutive start positions — O(L log L)
-    per n instead of the former per-distinct-gram in-array scan (O(L²),
-    which at 100k words × nine n values is ~10¹⁰ comparisons in one
-    task — a 100 TB straggler). Every sorted array and starts array is
-    projected behind its own select before a lambda indexes into it
-    (the HOF re-evaluation rule), so the whole pass is one narrow map
-    stage of attribute-reference lookups.
-
-    ``impl``: 'arrow' (default — numpy unique over id-windows inside
-    mapInPandas, ~4× the interpreted-HOF throughput, the same
-    trade minhash/simhash make) or 'native' (pure column expressions,
-    zero Python). Bit-identical — parity-tested and both green against
-    the same SQL oracle; the flag is a runtime choice, never a
-    semantic one."""
+    100 TB design: one row-local ``mapInPandas`` pass, LINEAR per
+    document — Counter / numpy ``unique`` over word-id windows, never a
+    per-distinct-gram scan of the document. The Python node is opaque to
+    Catalyst, so a ``.filter("keep")`` on the output cannot push a
+    substituted expression below it. Tested against the catalog entry's
+    DuckDB oracle on boundary documents."""
     from kafka_streams_demo_spark.functions.spread import spread
 
     # single-small-file corpus scans are ONE partition — the whole
     # per-doc pass ran on one core (2.4 → 0.55 s at sf0.1; no-op on
     # real-scale scans — functions/spread.py)
     docs = spread(docs.select(F.col(id_col), F.col(text_col)))
-    if impl == "arrow":
-        fn = _make_gopher_rep_arrow(
-            dict(GOPHER_TOP_NGRAM_LIMITS), dict(GOPHER_DUP_NGRAM_LIMITS),
-            _ENC, max_dup_line_frac, max_dup_line_char_frac,
-        )
-        schema = (
-            "doc_id long, dup_line_frac double, dup_line_char_frac double, "
-            + ", ".join(f"top{n}gram_char_frac double"
-                        for n in GOPHER_TOP_NGRAM_LIMITS) + ", "
-            + ", ".join(f"dup{n}gram_char_frac double"
-                        for n in GOPHER_DUP_NGRAM_LIMITS)
-            + ", keep boolean"
-        )
-        return docs.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-        ).mapInPandas(fn, schema)
-    if impl != "native":
-        raise ValueError(f"impl must be 'arrow' or 'native', got {impl!r}")
-    ns = sorted(set(GOPHER_TOP_NGRAM_LIMITS) | set(GOPHER_DUP_NGRAM_LIMITS))
-    # the words array MUST be bound before word_shingles indexes into it:
-    # a computed expression inside the shingle lambda re-evaluates the
-    # whole split+filter per element (O(L²) again, through the back door)
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(F.col(text_col)).cast("double").alias("_tc"),
-        F.array_sort(F.split(F.col(text_col), "\n")).alias("_ls"),
-        F.filter(F.split(F.col(text_col), " "), lambda x: x != "").alias("_w"),
+    fn = _make_gopher_rep_arrow(
+        dict(GOPHER_TOP_NGRAM_LIMITS), dict(GOPHER_DUP_NGRAM_LIMITS),
+        _ENC, max_dup_line_frac, max_dup_line_char_frac,
     )
-    base = toks.select(
-        "doc_id",
-        "_tc",
-        "_ls",
-        *[
-            F.array_sort(word_shingles(F.col("_w"), n)).alias(f"_s{n}")
-            for n in ns
-        ],
+    schema = (
+        "doc_id long, dup_line_frac double, dup_line_char_frac double, "
+        + ", ".join(f"top{n}gram_char_frac double"
+                    for n in GOPHER_TOP_NGRAM_LIMITS) + ", "
+        + ", ".join(f"dup{n}gram_char_frac double"
+                    for n in GOPHER_DUP_NGRAM_LIMITS)
+        + ", keep boolean"
     )
-    starts = base.select(
-        "doc_id",
-        "_tc",
-        "_ls",
-        *[f"_s{n}" for n in ns],
-        run_starts(F.col("_ls")).alias("_stl"),
-        *[run_starts(F.col(f"_s{n}")).alias(f"_st{n}") for n in ns],
-    )
-    nz = F.nullif(F.col("_tc"), F.lit(0.0))
-    n_lines = F.size("_ls")
-
-    def _cnt(st_col, s_col, st, j):
-        # run length = next start (or array end) − this start; O(1) reads
-        return (
-            F.coalesce(
-                F.try_element_at(st_col, (j + F.lit(2)).cast("int")), F.size(s_col)
-            )
-            - st
-        )
-
-    def stats(n):
-        s_col, st_col = F.col(f"_s{n}"), F.col(f"_st{n}")
-        enc = F.transform(
-            st_col,
-            lambda st, j: (
-                _cnt(st_col, s_col, st, j).cast("long") * F.lit(_ENC)
-                + F.least(F.length(F.get(s_col, st)), F.lit(_ENC - 1))
-            ),
-        )
-        top = F.array_max(enc)
-        top_frac = F.round(
-            F.coalesce(
-                ((top / F.lit(_ENC)).cast("long") * F.pmod(top, F.lit(_ENC)))
-                / nz,
-                F.lit(0.0),
-            ),
-            6,
-        )
-        dup_chars = F.aggregate(
-            enc,
-            F.lit(0).cast("long"),
-            lambda acc, e: acc
-            + F.when(
-                (e / F.lit(_ENC)).cast("long") > 1,
-                (e / F.lit(_ENC)).cast("long") * F.pmod(e, F.lit(_ENC)),
-            ).otherwise(F.lit(0)),
-        )
-        dup_frac = F.round(
-            F.least(F.lit(1.0), F.coalesce(dup_chars / nz, F.lit(0.0))), 6
-        )
-        return top_frac, dup_frac
-
-    # distinct line count = run count in the sorted array; duplicate-line
-    # chars from run lengths — same O(L log L) replacement of the former
-    # per-line in-array scan
-    dup_line_frac = F.round(
-        (n_lines - F.size("_stl")).cast("double")
-        / F.nullif(n_lines.cast("double"), F.lit(0.0)),
-        6,
-    )
-    dup_line_chars = F.aggregate(
-        F.transform(
-            F.col("_stl"),
-            lambda st, j: F.when(
-                _cnt(F.col("_stl"), F.col("_ls"), st, j) > 1,
-                _cnt(F.col("_stl"), F.col("_ls"), st, j).cast("long")
-                * F.length(F.get(F.col("_ls"), st)),
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    dup_line_char_frac = F.round(
-        F.least(F.lit(1.0), F.coalesce(dup_line_chars / nz, F.lit(0.0))), 6
-    )
-    cols = {
-        "dup_line_frac": F.coalesce(dup_line_frac, F.lit(0.0)),
-        "dup_line_char_frac": dup_line_char_frac,
-    }
-    for n in GOPHER_TOP_NGRAM_LIMITS:
-        cols[f"top{n}gram_char_frac"] = stats(n)[0]
-    for n in GOPHER_DUP_NGRAM_LIMITS:
-        cols[f"dup{n}gram_char_frac"] = stats(n)[1]
-    out = starts.select("doc_id", *[c.alias(name) for name, c in cols.items()])
-    keep = (
-        (F.col("dup_line_frac") <= max_dup_line_frac)
-        & (F.col("dup_line_char_frac") <= max_dup_line_char_frac)
-    )
-    for n, lim in GOPHER_TOP_NGRAM_LIMITS.items():
-        keep = keep & (F.col(f"top{n}gram_char_frac") <= lim)
-    for n, lim in GOPHER_DUP_NGRAM_LIMITS.items():
-        keep = keep & (F.col(f"dup{n}gram_char_frac") <= lim)
-    # pushdown_barrier: .filter("keep") / .filter(signal <= x) on this
-    # output must NOT push below the projections — substitution would
-    # nest the run-length arrays back inside per-element lambdas
-    # (observed: a 300-char-doc corpus hangs). Scan-level pushdown on
-    # the gopher output is worthless anyway (it reads every doc's text).
-    return out.withColumn("keep", pushdown_barrier(keep))
+    return docs.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    ).mapInPandas(fn, schema)
 
 
 def char_gram_index(

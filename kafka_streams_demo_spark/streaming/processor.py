@@ -69,26 +69,6 @@ def running_count_processor(
     )
 
 
-def running_sum_processor(stream: DataFrame, group_cols: list[str] = ("key",)) -> DataFrame:
-    """Generalized aggregate(initializer)(adder) with explicit state —
-    the non-algebraic escape hatch in streaming mode."""
-
-    def sum_fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        total = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            total += int(pdf["value"].sum())
-        state.update((total,))
-        yield pd.DataFrame({"key": [key[0]], "value": [total]})
-
-    return process_with_state(
-        stream,
-        list(group_cols),
-        sum_fn,
-        output_schema="key string, value long",
-        state_schema="total long",
-    )
-
-
 def punctuated_count_processor(
     stream: DataFrame,
     group_cols: list[str] = ("key",),

@@ -1,5 +1,7 @@
 """Dedup family: exact, MinHash-LSH (recall vs exact), SimHash properties."""
 
+import math
+
 from pyspark.sql import functions as F
 
 from kafka_streams_demo_spark.functions.dedup import (
@@ -119,15 +121,35 @@ def test_embedding_cosine_pairs_detects_copies(spark):
     assert (1, 5) in got and got[(1, 5)] < 1.0
 
 
-def test_embedding_cosine_pairs_impls_are_bit_identical(spark):
-    """arrow (block kernel, sequential-dim fold) and native (HOF fold)
-    pair paths must emit the identical pair set with bit-equal cosines —
-    the impl flag is a runtime choice, never a semantic one. Fixture
-    stresses the boundaries: near-threshold cosines, ties, a >2-member
-    clique, negative components, an unequal-length vector (its pairs
-    score NULL natively → absent), and a NULL-element vector (absent)."""
-    import math
+def _fold_cosine(va, vb):
+    """Plain-Python reference cosine: dot and norms as sequential left
+    folds over dimensions, rounded HALF_UP to 6 dp like Spark's round.
+    None (no pair) where the cosine is undefined: unequal lengths, a
+    NULL or NaN element, a zero norm."""
+    from decimal import ROUND_HALF_UP, Decimal
 
+    if len(va) != len(vb) or None in va or None in vb:
+        return None
+    dot = na = nb = 0.0
+    for x, y in zip(va, vb):
+        dot += x * y
+        na += x * x
+        nb += y * y
+    den = math.sqrt(na) * math.sqrt(nb)
+    raw = dot / den if den else math.nan
+    if math.isnan(raw):
+        return None
+    # Spark rounds BigDecimal(Double.toString(x)): the shortest repr
+    return float(Decimal(repr(raw)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
+
+def test_embedding_cosine_pairs_impls_are_bit_identical(spark):
+    """The numpy block kernel must emit exactly the pair set and bit-equal
+    cosines of an independent plain-Python sequential fold. Fixture
+    stresses the boundaries: near-threshold cosines, ties, a >2-member
+    clique, negative components, and a NaN-element, an unequal-length
+    and a NULL-element vector (no defined cosine, so no pairs), at two
+    thresholds."""
     from kafka_streams_demo_spark.functions.dedup import embedding_cosine_pairs
 
     rows = []
@@ -138,54 +160,76 @@ def test_embedding_cosine_pairs_impls_are_bit_identical(spark):
     for blk in range(3):
         for k, v in enumerate(base):
             rows.append((blk * 100 + k, blk, [x + blk * 0.001 for x in v]))
+    rows += [
+        (989, 1, [math.nan, 0.0, 1.0]),
+        (990, 0, [1.0, 0.0]),
+        (991, 0, [1.0, None, 0.0]),
+    ]
     df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<double>")
-    short = spark.createDataFrame(
-        [(990, 0, [1.0, 0.0])], "vec_id long, label int, embedding array<double>"
-    )
-    nullel = spark.createDataFrame(
-        [(991, 0, [1.0, None, 0.0])], "vec_id long, label int, embedding array<double>"
-    )
-    df = df.unionByName(short).unionByName(nullel)
     for thr in (0.35, 0.9999):
-        a = {(r["i"], r["j"]): r["cos"] for r in
-             embedding_cosine_pairs(df, threshold=thr, block_col="label", impl="arrow").collect()}
-        n = {(r["i"], r["j"]): r["cos"] for r in
-             embedding_cosine_pairs(df, threshold=thr, block_col="label", impl="native").collect()}
-        assert set(a) == set(n)
-        for key in a:
-            ca, cn = a[key], n[key]
-            assert (ca == cn) or (math.isnan(ca) and math.isnan(cn)), (key, ca, cn)
-        assert a  # non-trivial
-        assert not any(990 in k or 991 in k for k in a)
+        got = {(r["i"], r["j"]): r["cos"] for r in
+               embedding_cosine_pairs(df, threshold=thr, block_col="label").collect()}
+        want = {}
+        for i, bi, vi in rows:
+            for j, bj, vj in rows:
+                if i < j and bi == bj:
+                    c = _fold_cosine(vi, vj)
+                    if c is not None and c >= thr:
+                        want[(i, j)] = c
+        assert got == want, thr
+        assert got  # non-trivial
+        assert not any(989 in k or 990 in k or 991 in k for k in got)
 
 
 def test_minhash_sig_impls_are_bit_identical(spark):
-    """arrow and native signature paths must produce identical values —
-    the impl flag is a runtime choice, never a semantic one."""
-    from kafka_streams_demo_spark.functions.dedup import doc_shingle_sets, minhash_sig_array
+    """The Arrow signature kernel must equal the groupBy formulation
+    ``minhash_signatures`` on the sf0.001 corpus plus boundary docs:
+    '_'-bearing words, unicode, and shingle-less docs (too few words),
+    whose signature is null and which the reference omits."""
+    from kafka_streams_demo_spark.functions.dedup import (
+        doc_shingle_sets,
+        minhash_sig_array,
+        minhash_signatures,
+    )
 
-    docs = load_table(spark, "documents", SF)
+    docs = load_table(spark, "documents", SF).select("doc_id", "text").unionByName(
+        _docs(spark, [
+            (-1, "a_b c_d e_f g"),
+            (-2, "naïve café déjà vu naïve café"),
+            (-3, "too short"),
+            (-4, ""),
+        ])
+    )
     ds = doc_shingle_sets(docs)
-    a = {r["doc_id"]: r["sig"] for r in minhash_sig_array(ds, impl="arrow").collect()}
-    n = {r["doc_id"]: r["sig"] for r in minhash_sig_array(ds, impl="native").collect()}
-    assert a == n
-    assert any(v is not None for v in a.values())
+    got = {r["doc_id"]: r["sig"] for r in minhash_sig_array(ds).collect()}
+    ref = minhash_signatures(ds.select("doc_id", F.explode("shset").alias("s")))
+    nh = len(ref.columns) - 1
+    want = {r["doc_id"]: [r[f"h{i}"] for i in range(nh)] for r in ref.collect()}
+    assert {k: v for k, v in got.items() if v is not None} == want
+    assert got[-3] is None and got[-4] is None
+    assert -1 in want and -2 in want
 
 
 def test_simhash_sig_impls_are_bit_identical(spark):
+    """The Arrow SimHash kernel must equal the column-expression majority
+    vote ``simhash_from_hashes`` (the one public simhash64 uses),
+    including empty token arrays (signature 0)."""
     from pyspark.sql import functions as F2
 
-    from kafka_streams_demo_spark.functions.dedup import simhash_sig
+    from kafka_streams_demo_spark.functions.dedup import simhash_from_hashes, simhash_sig
 
-    docs = load_table(spark, "documents", SF)
+    docs = load_table(spark, "documents", SF).select("doc_id", "text").unionByName(
+        _docs(spark, [(-1, ""), (-2, "naïve café a_b")])
+    )
     hashed = docs.select(
         F2.col("doc_id"),
         F2.transform(tokenize(F2.col("text")), lambda t: F2.xxhash64(t)).alias("_th"),
     )
-    a = {r["doc_id"]: r["sig"] for r in simhash_sig(hashed, impl="arrow").collect()}
-    n = {r["doc_id"]: r["sig"] for r in simhash_sig(hashed, impl="native").collect()}
-    assert a == n
-    assert any(v != 0 for v in a.values())
+    got = {r["doc_id"]: r["sig"] for r in simhash_sig(hashed).collect()}
+    want = {r["doc_id"]: r["sig"] for r in
+            hashed.select("doc_id", simhash_from_hashes(F2.col("_th")).alias("sig")).collect()}
+    assert got == want
+    assert any(v != 0 for v in got.values())
 
 
 def test_ngram_jaccard_max_doc_freq_drops_boilerplate_pairs(spark):
@@ -229,7 +273,7 @@ def test_minhash_groupby_formulation_matches_array_formulation(spark):
     }
     b = {
         r["doc_id"]: r["sig"]
-        for r in minhash_sig_array(doc_shingle_sets(docs), impl="arrow").collect()
+        for r in minhash_sig_array(doc_shingle_sets(docs)).collect()
         if r["sig"] is not None
     }
     assert a == b  # shingle-less docs appear in neither

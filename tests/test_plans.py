@@ -119,34 +119,24 @@ def test_ann_ops_broadcast_never_shuffle_corpus(spark):
 
 
 def test_dedup_family_stays_jvm_side(spark):
-    """Signature math (simhash/cosine/jaccard) is pure column expressions —
-    no Python eval nodes in those plans. minhash is the deliberate
-    exception: its signature stage is Arrow-vectorized numpy (measured 4×
-    over the interpreted HOF chain) — exactly ONE Python node (the
-    mapInPandas signature pass), twice in the plan because LSH candidates
-    and verification both read the shingle sets. embedding cosine pairing
-    is the other sanctioned kernel (r13): within-block pairs form inside
-    one numpy applyInPandas kernel (bit-identical sequential-dim fold,
-    parity-tested vs the HOF path in test_dedup.py) instead of a block
-    self-join, so its plan carries exactly one FlatMapGroupsInPandas."""
+    """Exact, n-gram Jaccard and blocked-kNN dedup are pure column
+    expressions — no Python eval nodes in those plans. The signature and
+    repetition kernels are the sanctioned exceptions, each ONE numpy pass
+    over Arrow batches (one implementation per kernel, tested against an
+    independent reference in test_dedup.py / test_text.py): minhash's
+    mapInPandas signature pass (twice in the plan because LSH candidates
+    and verification both read the shingle sets), simhash's signature
+    pass, the embedding-cosine applyInPandas block kernel, and gopher's
+    single mapInPandas pass."""
     for name in ["dedup_exact", "ngram_jaccard_pairs", "embedding_knn_blocked"]:
         a = _audit(spark, name)
         assert a.python_evals == 0, f"{name} fell off the JVM path:\n{a.plan}"
     for name in ["minhash_lsh_pairs", "simhash_pairs", "dedup_embedding_cosine"]:
         a = _audit(spark, name)
         assert 1 <= a.python_evals <= 2, f"unexpected Python nodes:\n{a.plan}"
-
-
-def test_minhash_native_impl_stays_jvm_side(spark):
-    """The native fallback signature paths have NO Python runtime in their
-    plans — they exist for Python-worker-free deployments."""
-    from kafka_streams_demo_spark.functions.dedup import minhash_lsh_pairs, simhash_pairs
-    from kafka_streams_demo_spark.sources.registry import load_table
-
-    docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-    for fn in (minhash_lsh_pairs, simhash_pairs):
-        a = audit(fn(docs, signature_impl="native"))
-        assert a.python_evals == 0, a.plan
+    a = _audit(spark, "gopher_repetition_filter")
+    assert a.python_evals == 1, a.plan
+    assert len(re.findall(r"^\(\d+\) MapInPandas", a.plan, re.M)) == 1, a.plan
 
 
 def test_minhash_scan_prunes_to_needed_columns(spark):

@@ -2370,6 +2370,17 @@ def test_wallclock_drive_punctuation_multiplicity(spark):
     ][:5]
 
 
+def _state_partitions(spark, ck):
+    """The state partition count recorded in the checkpoint (the session
+    sizes it from the core count when the query first runs)."""
+    from kafka_streams_demo_spark.streaming.interactive import state_metadata
+
+    return int(
+        state_metadata(spark, ck).filter(F.col("operatorId") == 0)
+        .select("numPartitions").first()[0]
+    )
+
+
 def test_state_get_point_single_partition_read(spark, tmp_path):
     """VERDICT r11 task 8: store.get(key) as a TRUE single-partition read.
     Drives enough micro-batches (maxFilesPerTrigger=1 over 8 files,
@@ -2418,7 +2429,7 @@ def test_state_get_point_single_partition_read(spark, tmp_path):
         q.awaitTermination(180)
 
         # maintenance is async: poll for a snapshot in k3's partition
-        p3 = state_partition(spark, {"key": "k3"}, 32)
+        p3 = state_partition(spark, {"key": "k3"}, _state_partitions(spark, ck))
         deadline = _time.monotonic() + 60
         while (
             latest_partition_snapshot(ck, p3) is None
@@ -2496,8 +2507,9 @@ def test_state_get_point_snapshot_deterministic(spark, tmp_path):
         q.awaitTermination(180)
         # bounded event-wait (not a sleep): every key's partition must
         # produce a snapshot under the eager confs
+        n_parts = _state_partitions(spark, ck)
         for i in range(4):
-            p = state_partition(spark, {"key": f"k{i}"}, 32)
+            p = state_partition(spark, {"key": f"k{i}"}, n_parts)
             assert await_partition_snapshot(ck, p, timeout_s=30) >= 1
 
     for i in range(4):

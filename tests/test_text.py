@@ -454,9 +454,9 @@ def test_run_starts_semantics(spark):
 
 
 def test_gopher_repetition_long_document_bounded(spark):
-    """The linearized counting (array_sort + run_starts) must handle a
-    ≥50k-word document in bounded time — the former per-distinct-gram
-    in-array scan was O(L²)·9 (~10¹⁰ comparisons at this length) and
+    """The linear counting (Counter / numpy unique over word-id windows)
+    must handle a ≥50k-word document in bounded time — a per-distinct-
+    gram in-array scan is O(L²)·9 (~10¹⁰ comparisons at this length) and
     would effectively never finish. Values stay exact: the dominating
     2-gram fraction and dup-gram coverage match hand math."""
     import time
@@ -475,8 +475,8 @@ def test_gopher_repetition_long_document_bounded(spark):
     got = {r["doc_id"]: r for r in gopher_repetition(docs).collect()}
     elapsed = time.monotonic() - t0
     assert elapsed < 120.0, f"long-doc pass took {elapsed:.1f}s — not linear"
-    # .filter("keep") is the natural composition — the pushdown_barrier
-    # must keep the pushed predicate from re-inflating the HOF tree
+    # .filter("keep") is the natural composition — it must stay above
+    # the kernel's single pass
     t0 = time.monotonic()
     kept = gopher_repetition(docs).filter("keep").count()
     elapsed = time.monotonic() - t0
@@ -540,13 +540,18 @@ def test_bm25_postings_null_text_matches_direct_path(spark):
 
 
 def test_gopher_repetition_impls_are_bit_identical(spark):
-    """arrow (numpy/Counter kernel) and native (HOF column expressions)
-    gopher_repetition must produce identical rows — the impl flag is a
-    runtime choice, never a semantic one. The fixture forces every
-    kernel path: short docs (tuple-Counter), a >2000-word doc (numpy
-    id-window path), '_'-bearing words (joined-string fallback, where
-    id-tuples and joins are non-bijective), unicode, NULL and empty
-    text, heavy repetition."""
+    """The gopher_repetition kernel must reproduce the catalog entry's
+    DuckDB oracle (``_gopher_rep_sql``) row for row on a fixture that
+    forces every kernel path: short docs (tuple-Counter), a >2000-word
+    doc (numpy id-window path), '_'-bearing words (joined-string
+    fallback, where id-tuples and joins are non-bijective), unicode,
+    NULL and empty text (both score as empty), heavy repetition."""
+    import duckdb
+    import pandas as pd
+
+    from kafka_streams_demo_spark.catalog.temporal import _gopher_rep_sql
+    from kafka_streams_demo_spark.functions.text import gopher_repetition
+
     rows = [
         (1, "the cat sat\nthe cat sat\non the mat."),
         (2, "a_b c d a b_c d"),                       # '_' fallback path
@@ -558,12 +563,15 @@ def test_gopher_repetition_impls_are_bit_identical(spark):
         (8, "x " * 50),                                # one dominating gram
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    from kafka_streams_demo_spark.functions.text import gopher_repetition
-
-    a = {r["doc_id"]: tuple(r) for r in gopher_repetition(docs, impl="arrow").collect()}
-    n = {r["doc_id"]: tuple(r) for r in gopher_repetition(docs, impl="native").collect()}
-    assert a == n
-    assert len(a) == len(rows)
+    got = {r["doc_id"]: r.asDict() for r in gopher_repetition(docs).collect()}
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    cur = con.execute(_gopher_rep_sql())
+    names = [d[0] for d in cur.description]
+    want = {r[0]: dict(zip(names, r)) for r in cur.fetchall()}
+    assert got == want
+    assert len(got) == len(rows)
+    assert got[3] == {**got[4], "doc_id": 3}
 
 
 def test_char_gram_index_positions(spark):
