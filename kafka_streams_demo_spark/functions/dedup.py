@@ -467,7 +467,6 @@ def minhash_lsh_pairs_incremental(
     num_hashes: int = NUM_HASHES, bands: int = BANDS,
     text_col: str = "text", id_col: str = "doc_id",
     max_bucket_size: int = 10_000,
-    broadcast_delta: bool = False,
 ) -> DataFrame:
     """Index+delta near-dup detection — the production ingest loop:
     signatures are computed for the NEW batch only; the existing corpus
@@ -478,15 +477,11 @@ def minhash_lsh_pairs_incremental(
 
     ``corpus`` must contain every doc the pairs may reference (old +
     new) — verification re-tokenizes only candidate docs via a semi-join
-    into it. Scale: by default join strategy is left to Catalyst/AQE —
-    a small delta broadcasts automatically under
-    ``autoBroadcastJoinThreshold``, a LARGE ingest batch (10⁷–10⁸ docs
-    × ``bands`` band rows is a realistic daily delta at corpus scale)
-    degrades to a shuffle join instead of OOMing executors. Pass
-    ``broadcast_delta=True`` only when the caller KNOWS the batch is
-    small — it force-broadcasts the delta's band rows, the candidate
-    pair list, and the candidate-id semi-join so the TB-scale index and
-    corpus never shuffle. Pre-bucket the persisted ``minhash_index`` on
+    into it. Scale: join strategy is left to Catalyst/AQE — a small
+    delta broadcasts automatically under ``autoBroadcastJoinThreshold``,
+    a LARGE ingest batch (10⁷–10⁸ docs × ``bands`` band rows is a
+    realistic daily delta at corpus scale) degrades to a shuffle join
+    instead of OOMing executors. Pre-bucket the persisted ``minhash_index`` on
     ``(band, bucket)`` so the index side is exchange-free either way.
     The one index-wide aggregate is the hot-bucket cap check, map-side
     combined. ``max_bucket_size`` counts the bucket across index ∪
@@ -495,7 +490,6 @@ def minhash_lsh_pairs_incremental(
     The candidate pair list is persisted (read 3×); call
     ``release_caches()`` after materializing the result to free it in a
     long-lived driver session."""
-    hint = F.broadcast if broadcast_delta else (lambda df: df)
     # Materialize the delta's band rows ONCE: new_banded feeds the cap
     # census, the probe side, and its own pair_up branch, and Catalyst
     # re-runs the whole shingle→Arrow-signature→band pipeline per branch
@@ -512,7 +506,7 @@ def minhash_lsh_pairs_incremental(
     sizes = index.unionByName(new_banded).groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("_bsz")
     )
-    # hot is ALWAYS broadcast (independent of broadcast_delta): it holds
+    # hot is ALWAYS broadcast: it holds
     # only the over-cap outlier buckets — a handful of rows by
     # construction — and without the hint its inherited 32-partition agg
     # distribution would force a bucketed index scan through a re-Exchange
@@ -533,7 +527,7 @@ def minhash_lsh_pairs_incremental(
         other = side.join(hot, ["band", "bucket"], "left_anti").select(
             "band", "bucket", F.col("doc_id").alias("_other")
         )
-        return hint(probe).join(other, ["band", "bucket"])
+        return probe.join(other, ["band", "bucket"])
 
     candidates = (
         pair_up(index).unionByName(pair_up(new_banded))
@@ -558,12 +552,12 @@ def minhash_lsh_pairs_incremental(
     # exchanges and a double corpus scan at sf0.01). Candidate-sized,
     # released with the same release_caches() contract.
     cand_ds = doc_shingle_sets(
-        corpus.join(hint(cand_ids), id_col, "left_semi"), n, text_col, id_col
+        corpus.join(cand_ids, id_col, "left_semi"), n, text_col, id_col
     ).persist()
     _track_cache(cand_ds)
     di, dj = cand_ds.alias("di"), cand_ds.alias("dj")
     return (
-        hint(candidates).join(di, F.col("i") == F.col("di.doc_id"))
+        candidates.join(di, F.col("i") == F.col("di.doc_id"))
         .join(dj, F.col("j") == F.col("dj.doc_id"))
         .withColumn("common", F.size(F.array_intersect(F.col("di.shset"), F.col("dj.shset"))))
         .withColumn(
@@ -923,8 +917,8 @@ def embedding_cosine_pairs(
     raw doubles (the kernel prefilters at threshold − 1e-6, below any
     value that could round up to clear). A pair with no defined cosine
     is not emitted: unequal lengths, a NULL or NaN element, or a zero
-    norm (pandas hands NULL elements over as NaN, and a NaN result
-    returns through Arrow as NULL, which the threshold drops). Pinned in
+    norm (pandas hands NULL elements over as NaN, and the kernel's
+    threshold test drops NaN cosines). Pinned in
     tests/test_dedup.py against a plain-Python fold on boundary cosines.
     """
     emb = _cap_blocks(emb, block_col, max_block_size, on_oversized)
@@ -949,11 +943,9 @@ def embedding_cosine_pairs(
 
         ids = pdf["i"].values
         empty = pd.DataFrame({"i": ids[:0], "j": ids[:0], "_raw": np.array([], dtype=np.float64)})
-        # bucket rows by exact vector length. A NULL element scores every
-        # touching pair NULL natively (acc + NULL = NULL) → filtered, so
-        # the row is excluded here; a NaN element (or zero norm) scores
-        # NaN, which Spark ORDERS ABOVE the threshold (NaN > any value)
-        # → the pair is EMITTED with cos NaN, so NaN rows stay in.
+        # bucket rows by exact vector length. A row with a NULL element
+        # has no defined cosine and is excluded here; a NaN element (or
+        # zero norm) scores NaN, which the threshold test below drops.
         by_len: dict = {}
         for r, v in enumerate(pdf["_v"].values):
             if v is None:
@@ -984,8 +976,7 @@ def embedding_cosine_pairs(
             with np.errstate(invalid="ignore", divide="ignore"):
                 raw = acc / (nrm[iu] * nrm[ju])
             ii, jj = ids[ridx[iu]], ids[ridx[ju]]
-            # NaN pairs stay (Spark's filter keeps them: NaN > threshold)
-            keep = ((raw >= thr - 1e-6) | np.isnan(raw)) & (ii != jj)
+            keep = (raw >= thr - 1e-6) & (ii != jj)
             if not keep.any():
                 continue
             ii, jj, raw = ii[keep], jj[keep], raw[keep]
@@ -1053,7 +1044,9 @@ def embedding_cosine_pairs_incremental(
                 dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
             ).alias("cos"),
         )
-        .filter(F.col("cos") >= threshold)
+        # Spark orders NaN above every threshold: drop undefined cosines
+        # (a NaN element or a zero norm), as the batch kernel does
+        .filter((F.col("cos") >= threshold) & ~F.isnan("cos"))
         .distinct()  # new×new pairs arrive once per orientation; cos is
         # symmetric and rounded, so distinct collapses them exactly
     )
@@ -1067,7 +1060,6 @@ def semdedup_cells(
     cell_col: str = "label",
     max_cell_size: int | None = 10_000,
     on_oversized: str = "drop",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): semantic dedup over
@@ -1096,12 +1088,10 @@ def semdedup_cells(
     kept=true) — same documented cap semantics as the other dedup
     families; audit with ``oversized_blocks``.
 
-    ``checkpoint``: the assignment frame feeds three branches (both
-    pair sides + the verdict join); Catalyst recomputes common subtrees
-    per branch, so it is localCheckpoint'ed once by default — in the
-    production loop these assignment rows are the persisted artifact
-    anyway. Pass False to keep the plan fully lazy (the oracle result
-    is identical either way)."""
+    The assignment frame feeds three branches (both pair sides + the
+    verdict join); Catalyst recomputes common subtrees per branch, so
+    it is localCheckpoint'ed once — in the production loop these
+    assignment rows are the persisted artifact anyway."""
     from kafka_streams_demo_spark.functions.similarity import (
         dot,
         ivf_assign,
@@ -1120,9 +1110,7 @@ def semdedup_cells(
             / (norm(F.col("vec")) * norm(F.col("centroid"))),
             6,
         ).alias("ccos"),
-    )
-    if checkpoint:
-        pri = pri.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     pairs = embedding_cosine_pairs(
         pri,
         threshold=threshold,
@@ -1166,7 +1154,6 @@ def semdedup_cells_incremental(
     vec_col: str = "embedding",
     max_cell_size: int | None = 10_000,
     on_oversized: str = "drop",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Index+delta SemDeDup — the production ingest loop, completing
     the incremental tier across all four dedup families (exact hashes,
@@ -1206,9 +1193,7 @@ def semdedup_cells_incremental(
             / (norm(F.col("vec")) * norm(F.col("centroid"))),
             6,
         ).alias("ccos"),
-    )
-    if checkpoint:
-        dpri = dpri.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     kept_idx = (
         index.filter(F.col("kept"))
         .select("vec_id", "cell", "ccos")
@@ -1394,7 +1379,6 @@ def dedup_clusters_incremental(
     new_pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 25,
-    broadcast_delta: bool = False,
 ) -> DataFrame:
     """Index+delta CLUSTER maintenance — the incremental tier for
     ``dedup_clusters``, completing the set (exact / minhash / jaccard /
@@ -1406,9 +1390,9 @@ def dedup_clusters_incremental(
     assignment index), connected components runs over the REP-LEVEL
     edge graph (delta-sized — never the original pair set), and the
     resulting (rep → new root) map rewrites exactly the touched
-    clusters: old rows join the tiny root map (broadcast under
-    ``broadcast_delta=True``, else AQE decides — same discipline as
-    ``minhash_lsh_pairs_incremental``), so the TB-scale assignment
+    clusters: old rows join the tiny root map (AQE picks the join
+    strategy — same discipline as ``minhash_lsh_pairs_incremental``),
+    so the TB-scale assignment
     table is one map-side pass and unclustered rows are untouched.
 
     Correctness: cluster ids are component minima, every old member ≥
@@ -1418,7 +1402,6 @@ def dedup_clusters_incremental(
     Registered against the SAME oracle as ``dedup_clusters``, so the
     driver hash gate proves batch ≡ incremental bit-for-bit. Output:
     (doc_id, cluster_id, is_canonical) over indexed ∪ new corpus."""
-    hint = F.broadcast if broadcast_delta else (lambda d: d)
     asg_i = assignments.select(
         F.col(id_col).alias("_ni"), F.col("cluster_id").alias("_ci")
     )
@@ -1427,7 +1410,7 @@ def dedup_clusters_incremental(
     )
     p = new_pairs.select("i", "j")
     rep_edges = (
-        hint(p)
+        p
         .join(asg_i, p["i"] == F.col("_ni"), "left")
         .join(asg_j, p["j"] == F.col("_nj"), "left")
         .select(
@@ -1439,13 +1422,13 @@ def dedup_clusters_incremental(
     cc = connected_components(rep_edges, src="ri", dst="rj", max_iter=max_iter)
     root = cc.select(F.col("node").alias("_r"), F.col("cluster_id").alias("_root"))
     old_updated = assignments.join(
-        hint(root), assignments["cluster_id"] == F.col("_r"), "left"
+        root, assignments["cluster_id"] == F.col("_r"), "left"
     ).select(
         F.col(id_col).alias("doc_id"),
         F.coalesce("_root", "cluster_id").alias("cluster_id"),
     )
     nd = new_docs.select(F.col(id_col).alias("doc_id"))
-    new_rows = nd.join(hint(root), nd["doc_id"] == F.col("_r"), "left").select(
+    new_rows = nd.join(root, nd["doc_id"] == F.col("_r"), "left").select(
         "doc_id", F.coalesce("_root", "doc_id").alias("cluster_id")
     )
     return old_updated.unionByName(new_rows).select(

@@ -25,12 +25,12 @@ Design rules:
 
 - **Triangle counting** (degree-oriented, the MapReduce-era standard —
   Suri & Vassilvitskii WWW'11): orient each undirected edge from its
-  lower-(degree, id) endpoint to the higher one, enumerate wedges only
-  from each node's out-edges, and close them against oriented edges.
-  Out-degree under this orientation is bounded by O(sqrt(m)), so the
-  wedge blowup is m^1.5 worst-case instead of sum(deg^2) — the
-  difference between a feasible and an impossible shuffle on a
-  power-law graph at 100 TB. Pure integer math, fully SQL-replayable.
+  lower-(degree, id) endpoint to the higher one and intersect the two
+  endpoints' out-neighborhoods per oriented edge. Out-degree under this
+  orientation is bounded by O(sqrt(m)), so the work is m^1.5
+  worst-case instead of sum(deg^2) — the difference between a feasible
+  and an impossible job on a power-law graph at 100 TB. Pure integer
+  math, fully SQL-replayable.
 """
 
 from __future__ import annotations
@@ -261,118 +261,52 @@ def orient_edges(undirected: DataFrame) -> DataFrame:
     )
 
 
-def triangle_counts(
-    undirected: DataFrame,
-    bloom_prefilter: bool = False,
-    bloom_num_bits: int = 1 << 22,
-) -> DataFrame:
+def triangle_counts(undirected: DataFrame) -> DataFrame:
     """Per-node triangle counts over an undirected edge list (a, b) with
     a != b and each edge listed once. Returns (node, triangles) for
     nodes in >= 1 triangle.
 
-    Degree-oriented: wedges enumerate only out-edge pairs of each node
-    (ordered by the same (degree, id) total order, so each triangle is
-    generated exactly once as its lowest-ordered vertex's wedge) and
-    close against the oriented edge set.
-
-    Default path (r13): per-edge out-neighborhood INTERSECTION instead
-    of wedge materialization. For oriented edge (u, v), every
+    Degree-oriented per-edge out-neighborhood INTERSECTION instead of
+    wedge materialization. For oriented edge (u, v), every
     z in N+(u) ∩ N+(v) closes the triangle (u, v, z) exactly once (z is
     the top of both out-edges; the wedge at u and the closing edge
     (v, z) are implied). The out-adjacency collapses to one array row
     per node — bounded at O(sqrt(m)) elements by the orientation — so
     the only data that ever crosses an exchange is m edge rows plus the
     node-count-sized adjacency table, instead of the O(m^1.5) wedge
-    rows the closing join used to move (~40 bytes/edge vs 24 bytes x
+    rows a wedge-closing join would move (~40 bytes/edge vs 24 bytes x
     out-degree; guide §2.3 "shuffle keys and metadata instead of
     payloads"). The intersection itself is JVM-native ``array_intersect``
     over whole arrays. Measured at sf0.1 on the co-order graph:
-    7.1 → 4.7 s warm, node-count parity exact.
-
-    ``bloom_prefilter`` keeps the previous wedge+closing formulation and
-    fronts its closing exchange with the repo's broadcast bloom
-    (functions/bloom.py). It remains the right plan when per-node
-    adjacency arrays are unwelcome (extreme hubs where even the
-    O(sqrt(m))-capped array row is too large, or memory-tight reducers):
-    wedge rows stream row-at-a-time and never build per-node state.
-    Results are IDENTICAL on every path (the cross-implementation
-    parity test pins it)."""
+    7.1 → 4.7 s warm against the wedge join, node-count parity exact."""
     # oriented edges feed three branches (adjacency + both probe joins)
     # — materialize once instead of re-deriving the orientation joins
     # per branch
     oe = orient_edges(undirected).localCheckpoint(eager=True)
-    if bloom_prefilter:
-        e1 = oe.select(
-            F.col("src").alias("a"),
-            F.col("dst").alias("b"),
-            F.col("dst_deg").alias("bd"),
-        )
-        e2 = oe.select(
-            F.col("src").alias("a"),
-            F.col("dst").alias("c"),
-            F.col("dst_deg").alias("cd"),
-        )
-        wedges = e1.join(e2, "a").filter(
-            (F.col("bd") < F.col("cd"))
-            | ((F.col("bd") == F.col("cd")) & (F.col("b") < F.col("c")))
-        )
-        from kafka_streams_demo_spark.functions.bloom import (
-            bloom_build,
-            bloom_might_contain,
-        )
-
-        bitmap = bloom_build(
-            oe.select(
-                F.concat_ws("|", F.col("src").cast("string"), F.col("dst").cast("string")).alias("k")
+    out_adj = oe.groupBy(F.col("src").alias("p")).agg(
+        F.collect_list("dst").alias("nb")
+    )
+    # SHUFFLE-HASH both adjacency joins: the array table is
+    # node-count-sized (hash it), edges stream past unsorted.
+    cand = (
+        oe.select("src", "dst")
+        .join(
+            out_adj.withColumnsRenamed({"p": "src", "nb": "_nu"}).hint(
+                "shuffle_hash"
             ),
-            "k",
-            num_bits=bloom_num_bits,
+            "src",
         )
-        wedges = wedges.filter(
-            bloom_might_contain(
-                bitmap,
-                F.concat_ws("|", F.col("b").cast("string"), F.col("c").cast("string")),
-            )
+        .join(
+            out_adj.withColumnsRenamed({"p": "dst", "nb": "_nv"}).hint(
+                "shuffle_hash"
+            ),
+            "dst",
         )
-        # SHUFFLE-HASH the closing join: the wedge side is O(m^1.5) rows
-        # and a sort-merge join SORTS it; hashing the m-row edge side
-        # instead lets wedges stream unsorted past a per-partition hash
-        # map. At scale the build side is m/partitions edges per task —
-        # size partitions to executor memory; Spark 3+ SHJ spills rather
-        # than OOMs.
-        closing = oe.select(F.col("src").alias("b"), F.col("dst").alias("c")).hint(
-            "shuffle_hash"
+        .select(
+            "src", "dst", F.explode(F.array_intersect("_nu", "_nv")).alias("z")
         )
-        tris = wedges.join(closing, ["b", "c"]).select("a", "b", "c")
-        # corners via ONE explode, not a 3-branch union: Catalyst does
-        # not dedupe common subtrees across union branches (r13 plan
-        # audit: the union form ran the wedge+closing join THREE times).
-        corners = tris.select(F.explode(F.array("a", "b", "c")).alias("node"))
-    else:
-        out_adj = oe.groupBy(F.col("src").alias("p")).agg(
-            F.collect_list("dst").alias("nb")
-        )
-        # SHUFFLE-HASH both adjacency joins: the array table is
-        # node-count-sized (hash it), edges stream past unsorted.
-        cand = (
-            oe.select("src", "dst")
-            .join(
-                out_adj.withColumnsRenamed({"p": "src", "nb": "_nu"}).hint(
-                    "shuffle_hash"
-                ),
-                "src",
-            )
-            .join(
-                out_adj.withColumnsRenamed({"p": "dst", "nb": "_nv"}).hint(
-                    "shuffle_hash"
-                ),
-                "dst",
-            )
-            .select(
-                "src", "dst", F.explode(F.array_intersect("_nu", "_nv")).alias("z")
-            )
-        )
-        corners = cand.select(F.explode(F.array("src", "dst", "z")).alias("node"))
+    )
+    corners = cand.select(F.explode(F.array("src", "dst", "z")).alias("node"))
     return corners.groupBy("node").agg(F.count(F.lit(1)).alias("triangles"))
 
 

@@ -20,10 +20,10 @@ Three pieces, mapped onto the repo's determinism rules:
   estimator) — iterative, so rows-only like ``kmeans_train``, with the
   quantization-error improvement pinned by unit test instead.
 - **Encode** (``pq_encode``): ROW-LOCAL argmin over the k codewords per
-  subspace — codebooks are driver-bounded (m·k rows), embedded as a
-  nested literal, so encoding is a map-only pass: the corpus NEVER
-  shuffles, the plan is one Project (plan-pinned). Ties on rounded
-  distance break to the smaller code on both engines.
+  subspace — codebooks are driver-bounded (m·k rows) and broadcast to
+  an Arrow kernel, so encoding is a map-only pass: the corpus NEVER
+  shuffles (plan-pinned). Ties on rounded distance break to the
+  smaller code on both engines.
 - **ADC top-k** (``pq_adc_topk``): per query, an m·k distance table
   (query subvector ↔ codeword, the classic lookup table) is built on
   the tiny side and broadcast; approximate distance is the SORTED fold
@@ -103,25 +103,9 @@ def pq_sample_codebooks(
     )
 
 
-# m·k·ds codebook elements above which pq_encode abandons the SQL
-# literal for the Arrow broadcast-matrix kernel. Originally 32768 on the
-# assumption the literal is "free" at the m=8/k=16 contract (~1k
-# elements); r13 measured otherwise: HOF lambdas evaluate INTERPRETED
-# (no whole-stage codegen inside aggregate/transform), so the per-row
-# argmin fold costs ~0.5 ms/row at 1024 codebook elements — the numpy
-# kernel beats it at any corpus size past a few hundred rows
-# (ivf_pq_residual_topk 3.2 → 2.2 s at sf0.1; every PQ tier moves).
-# 512 keeps the literal for genuinely tiny codebooks and for
-# Python-worker-free deployments (literal_max_elements override — the
-# parity + tie-order tests in tests/test_pq.py pin both branches
-# bit-equal). Both branches remain zero-Exchange map passes.
-PQ_LITERAL_MAX_ELEMENTS = 512
-
-
 def _collect_codebooks(codebooks: DataFrame, m: int) -> dict[int, list]:
-    """{sub: [(code, cvec), ...] sorted by code — the argmin fold's tie
-    order}. Driver-bounded at m·k rows; both encode branches start
-    here."""
+    """{sub: [(code, cvec), ...] sorted by code — the argmin's tie
+    order}. Driver-bounded at m·k rows."""
     rows = codebooks.collect()
     by_sub: dict[int, list] = {}
     for r in rows:
@@ -174,8 +158,8 @@ def _make_pq_encode_kernel(bc, dim: int, m: int, keep_cols: tuple):
     safety). ``bc`` is a ``SparkContext.broadcast`` of ``(cods, mats)``
     from :func:`_pq_encode_broadcast`. Per subspace the |B|×k
     squared-distance block is one numpy broadcast; argmin's
-    first-occurrence rule over codewords sorted by code replays the
-    fold's first-wins (= smallest code) tie order; rounding replays
+    first-occurrence rule over codewords sorted by code gives the
+    first-wins (= smallest code) tie order; rounding replays
     ROUND(d2, 6) exactly via the midpoint-band Decimal rounder
     (captured by value — nothing resolves against this module on
     workers)."""
@@ -214,9 +198,9 @@ def _make_pq_encode_kernel(bc, dim: int, m: int, keep_cols: tuple):
                     return acc
 
                 r = round6_block(d2, exact)
-                # NULL/NaN elements: the fold's NaN-compares-false keeps
-                # the −1 init when NO codeword yields a finite distance;
-                # finite codewords still compete. Replay exactly.
+                # NULL/NaN elements: no-match code −1 when NO codeword
+                # yields a finite distance; finite codewords still
+                # compete.
                 rr = np.where(np.isfinite(r), r, np.inf)
                 best = np.argmin(rr, axis=1)
                 code = np.asarray([cods[s][b] for b in best], dtype=np.int32)
@@ -244,117 +228,39 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple = (),
-    literal_max_elements: int | None = None,
 ) -> DataFrame:
     """(vec_id, [keep_cols...,] sub, code) PQ codes — the 32×-smaller
     searchable corpus.
 
-    ROW-LOCAL: below ``literal_max_elements`` (default
-    PQ_LITERAL_MAX_ELEMENTS) the codebook literal rides inside one
-    Project, the argmin is a fold over the k codewords per subspace,
-    and the only row expansion is the final posexplode of the m-code
-    array — no Exchange anywhere (tests/test_pq.py pins the
-    shuffle-free plan). Above it (production k·dim — see the constant's
-    rationale) the same encode runs as an Arrow mapInPandas kernel over
-    explicitly BROADCAST codebook matrices (once per executor, never
-    pickled per task-set): still zero-Exchange, no SQL literal; parity
-    between the branches is test-pinned. Argmin
-    compares ROUND(d2, 6) with first-wins (= smallest code) tie order,
-    mirroring the oracle's (ROUND(d2,6), code) row_number. ``keep_cols``
-    ride through the map-only pass (e.g. the IVF cell label) so callers
-    never pay a corpus-keyed re-join to recover them. Vectors whose
-    length != dim raise (assert_true / kernel check) instead of
-    silently emitting the no-match code −1 the argmin init would
-    produce; NULL vector ELEMENTS still yield no-match codes — the
-    ADC scorers exclude those vectors via their exactly-m-entries
-    group guard."""
+    ROW-LOCAL: one Arrow mapInPandas pass over explicitly BROADCAST
+    codebook matrices (shipped once per executor, never pickled per
+    task-set) — no Exchange anywhere (tests/test_pq.py pins the
+    shuffle-free plan). Argmin compares ROUND(d2, 6) with first-wins
+    (= smallest code) tie order, mirroring the oracle's (ROUND(d2,6),
+    code) row_number. ``keep_cols`` ride through the map-only pass
+    (e.g. the IVF cell label) so callers never pay a corpus-keyed
+    re-join to recover them. Vectors that are NULL or whose length !=
+    dim raise instead of silently emitting the no-match code −1 the
+    argmin init would produce; NULL vector ELEMENTS still yield
+    no-match codes — the ADC scorers exclude those vectors via their
+    exactly-m-entries group guard."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
     by_sub = _collect_codebooks(codebooks, m)
-    ds = dim // m
-    cap = (
-        PQ_LITERAL_MAX_ELEMENTS
-        if literal_max_elements is None
-        else literal_max_elements
-    )
-    n_elems = sum(len(v) for cws in by_sub.values() for _, v in cws)
-    keep = [F.col(c) for c in keep_cols]
-    if n_elems > cap:
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        vecs = emb.select(
-            F.col(id_col).alias("vec_id"),
-            *keep,
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-        )
-        schema = StructType(
-            [vecs.schema["vec_id"]]
-            + [vecs.schema[c] for c in keep_cols]
-            + [StructField("sub", IntegerType()), StructField("code", IntegerType())]
-        )
-        bc = _pq_encode_broadcast(emb.sparkSession.sparkContext, by_sub, m)
-        return vecs.mapInPandas(
-            _make_pq_encode_kernel(bc, dim, m, tuple(keep_cols)), schema
-        )
-    cb_lit = _codebook_literal(by_sub, m)
-    # subvector arrays bound behind their own select (HOF re-eval rule);
-    # the assert_true filter fails loudly on NULL or wrong-length
-    # vectors instead of letting every subspace d2 go NULL → code −1
-    # (callers that tolerate NULL embeddings — ivf_pq_topk over an
-    # ivf_assign frame — filter them out before encoding).
-    sv = emb.filter(
-        F.assert_true(
-            F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim),
-            F.lit(f"pq_encode: {vec_col} NULL or length != dim={dim}"),
-        ).isNull()
-    ).select(
+    vecs = emb.select(
         F.col(id_col).alias("vec_id"),
-        *keep,
+        *[F.col(c) for c in keep_cols],
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    ).select(
-        "vec_id",
-        *keep,
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: F.slice(F.col("_v"), s * ds + 1, ds),
-        ).alias("_svs"),
-        cb_lit.alias("_cb"),
     )
-
-    def best_code(s: Column) -> Column:
-        subvec = F.element_at(F.col("_svs"), s + 1)
-        cwords = F.element_at(F.col("_cb"), s + 1)
-        init = F.struct(
-            F.lit(float("inf")).alias("d2"), F.lit(-1).alias("code")
-        )
-        # distances bound ONCE per codeword via transform, then a fold
-        # over the small (d2, code) structs: the previous single fold
-        # inlined _subvec_d2 twice per codeword (condition + kept value),
-        # doubling both the expression tree Catalyst must analyze/codegen
-        # and the runtime d2 evaluations on every when-true step — the
-        # residual entry's dominant fixed cost at bench scale (r13,
-        # guide §1.2). Identical result: the same deterministic d2 feeds
-        # the same strict-< first-wins comparison.
-        scored_cw = F.transform(
-            cwords,
-            lambda cw: F.struct(
-                F.round(_subvec_d2(subvec, cw["cvec"]), 6).alias("d2"),
-                cw["code"].alias("code"),
-            ),
-        )
-        folded = F.aggregate(
-            scored_cw,
-            init,
-            lambda acc, sc: F.when(sc["d2"] < acc["d2"], sc).otherwise(acc),
-        )
-        return folded["code"]
-
-    coded = sv.select(
-        "vec_id",
-        *keep,
-        F.posexplode(
-            F.transform(F.sequence(F.lit(0), F.lit(m - 1)), best_code)
-        ).alias("sub", "code"),
+    schema = StructType(
+        [vecs.schema["vec_id"]]
+        + [vecs.schema[c] for c in keep_cols]
+        + [StructField("sub", IntegerType()), StructField("code", IntegerType())]
     )
-    return coded.select("vec_id", *keep_cols, "sub", "code")
+    bc = _pq_encode_broadcast(emb.sparkSession.sparkContext, by_sub, m)
+    return vecs.mapInPandas(
+        _make_pq_encode_kernel(bc, dim, m, tuple(keep_cols)), schema
+    )
 
 
 def _query_dtab(
@@ -594,7 +500,7 @@ def ivf_pq_residual_topk(
     rows-only.)
 
     Shape at scale: residual computation and encode are one map-only
-    pass over the corpus (centroids broadcast, codebook literal,
+    pass over the corpus (centroids and codebooks broadcast,
     cell rides ``keep_cols`` — the corpus never re-joins itself); the
     per-(query, probed-cell) distance tables are |Q|·nprobe·m·k rows,
     broadcast; the only corpus-size shuffle is the map-side-combined

@@ -405,16 +405,15 @@ def _ivf_assign_arrow(
 def ivf_assign(
     vectors: DataFrame, centroids: DataFrame, n: int = 1,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    literal_max_elements: int | None = None,
 ) -> DataFrame:
     """Assign each vector to its ``n`` nearest centroids by cosine
     (rounded to 6 dp for cross-engine determinism; ties break on cell id).
 
     n=1 (the corpus-side path) is a ROW-LOCAL pass — at 100 TB the
-    corpus-wide assignment never shuffles. Below
-    ``literal_max_elements`` (default IVF_LITERAL_MAX_ELEMENTS) the
-    centroid table rides the plan as one SQL literal and the argmax is
-    a codegen'd fold: one Project, NO Exchange. Above it (production
+    corpus-wide assignment never shuffles. Up to
+    IVF_LITERAL_MAX_ELEMENTS centroid elements the centroid table rides
+    the plan as one SQL literal and the argmax is a codegen'd fold: one
+    Project, NO Exchange. Above it (production
     nlist ≫ the 10–100-cell contract) the same assignment runs as an
     Arrow mapInPandas kernel over an explicitly BROADCAST numpy matrix
     (once per executor, never per task-set) — still zero-Exchange,
@@ -429,12 +428,7 @@ def ivf_assign(
     if n != 1:
         return _ivf_assign_window(vectors, centroids, n, id_col, vec_col)
     rows, cell_type = _collect_centroids(centroids)
-    cap = (
-        IVF_LITERAL_MAX_ELEMENTS
-        if literal_max_elements is None
-        else literal_max_elements
-    )
-    if sum(len(r["centroid"]) for r in rows) > cap:
+    if sum(len(r["centroid"]) for r in rows) > IVF_LITERAL_MAX_ELEMENTS:
         return _ivf_assign_arrow(vectors, rows, cell_type, id_col, vec_col)
     cb_lit = _centroid_literal(rows, cell_type)
     vecs = vectors.select(
@@ -605,15 +599,14 @@ def _make_kmeans_d2_kernel(bc):
 def _kmeans_assign_d2(
     vectors: DataFrame, centroids: DataFrame,
     id_col: str = "vid", vec_col: str = "vec",
-    literal_max_elements: int | None = None,
 ) -> DataFrame:
     """Squared-Euclidean argmin assignment — the Lloyd trainer's own
     objective (ivf_assign's cosine fold is the SEARCH-time metric; the
     trainer must assign under the same d² it minimizes in the mean
     update, or the monotone-SSE contract does not hold). Same dispatch
-    shape as ivf_assign: below ``literal_max_elements`` (default
-    IVF_LITERAL_MAX_ELEMENTS) a centroid literal + codegen'd fold — one
-    Project, NO Exchange; strict < keeps the lowest cell on exact d²
+    shape as ivf_assign: up to IVF_LITERAL_MAX_ELEMENTS centroid
+    elements a centroid literal + codegen'd fold — one Project, NO
+    Exchange; strict < keeps the lowest cell on exact d²
     ties (deterministic, no rounding, so the textbook guarantee is
     preserved bit-for-bit). Above it (production nlist — FAISS trains
     coarse quantizers at 10⁵–10⁶ cells) the same argmin runs as an
@@ -623,12 +616,7 @@ def _kmeans_assign_d2(
     between centroids could in principle split, same caveat as every
     cross-impl d² comparison)."""
     rows, cell_type = _collect_centroids(centroids)
-    cap = (
-        IVF_LITERAL_MAX_ELEMENTS
-        if literal_max_elements is None
-        else literal_max_elements
-    )
-    if sum(len(r["centroid"]) for r in rows) > cap:
+    if sum(len(r["centroid"]) for r in rows) > IVF_LITERAL_MAX_ELEMENTS:
         from pyspark.sql.types import StructField, StructType
 
         bc = _ivf_assign_broadcast(vectors.sparkSession.sparkContext, rows)

@@ -372,7 +372,6 @@ def bm25_search_queries(
     text_col: str = "text",
     qid_col: str = "query_id",
     qtext_col: str = "query_text",
-    broadcast_queries: bool = True,
     postings=None,
 ):
     """BM25 over a QUERY TABLE — real retrieval scores thousands of
@@ -384,13 +383,17 @@ def bm25_search_queries(
     100 TB design: corpus rows never shuffle. Per-doc (term, tf) posting
     rows are ROW-LOCAL HOF math (distinct-token transform + in-array
     count — no corpus-keyed exchange anywhere); the query-term join is a
-    broadcast (``broadcast_queries``, default on — a query table is KB-
-    to-MB; set False to let AQE decide for huge query sets), so only the
-    MATCHED posting rows — query-relevant by construction — flow into
+    broadcast, so only the MATCHED posting rows — query-relevant by construction — flow into
     the df aggregate and the per-(query, doc) score shuffle. N/avgdl is
     one map-side-combined global aggregate broadcast back. The final
     per-query top-k is a rank window over scored pairs, partitioned by
     query — thousands of queries spread across the cluster.
+
+    Broadcast precondition: the query terms, the per-term df table
+    (≤ |query vocabulary| rows) and the 1-row N/avgdl stats are always
+    broadcast, so the query table must fit under Spark's broadcast
+    limits — KB-to-MB for any realistic query set. Split a larger query
+    set into batches of queries.
 
     Pass ``postings`` (a persisted ``bm25_postings`` table — bucketed by
     term via ``write_bm25_postings``) to score against the stored index
@@ -406,7 +409,6 @@ def bm25_search_queries(
     unpersisted sample) could make _df disagree with the matched rows.
     Every catalog caller passes a deterministic scan, a checkpointed
     frame, or the closed-form generated corpus."""
-    hint = F.broadcast if broadcast_queries else (lambda df: df)
     if postings is None:
         if docs is None:
             raise ValueError("bm25_search_queries needs docs or postings")
@@ -450,14 +452,11 @@ def bm25_search_queries(
     # the A/B says that is the right trade: 6.3 → 5.2 s warm on
     # bm25_zipf_direct at sf0.1, results bit-identical (the r12 window
     # form paid the full rel exchange to read the subtree once).
-    rel0 = postings.join(hint(qterms.select("term").distinct()), ["term"])
+    rel0 = postings.join(F.broadcast(qterms.select("term").distinct()), ["term"])
     dfc_tbl = rel0.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
-    # dfc_tbl is ALWAYS broadcast, independent of ``broadcast_queries``:
-    # it is vocab-bounded (≤ |query vocab| rows) no matter how large the
-    # query table is, and without the hint the broadcast_queries=False
-    # path degrades to a term-keyed shuffle join — paying BOTH the
-    # exchange this restructure removed AND the double evaluation of the
-    # posting subtree (ADVICE r13).
+    # dfc_tbl is broadcast: it is vocab-bounded (≤ |query vocab| rows),
+    # and a term-keyed shuffle join would pay BOTH the exchange this
+    # restructure removed AND the double evaluation of the posting subtree.
     rel = rel0.join(F.broadcast(dfc_tbl), ["term"])
     tf = F.col("tf").cast("double")
     dfc = F.col("_df").cast("double")
@@ -481,7 +480,7 @@ def bm25_search_queries(
     # below reuses the SAME exchange instead of re-shuffling every
     # (query, doc) score row (guide §2.4 — one exchange, two windows)
     scored = sorted_fold_sum(
-        rel.join(hint(qterms), ["term"]).crossJoin(hint(stats)),
+        rel.join(F.broadcast(qterms), ["term"]).crossJoin(F.broadcast(stats)),
         ["query_id", "doc_id"],
         contrib,
         "score",

@@ -219,44 +219,6 @@ def dead_letter_split(df: DataFrame, corrupt_col: str = "_corrupt_record") -> tu
     return good, dead
 
 
-def kafka_stream(
-    spark: SparkSession,
-    topic: str,
-    brokers: str = "localhost:9092",
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """builder.stream(topic) → Structured Streaming Kafka source with the
-    canonical record projection (SURVEY §2a). Not exercised in tests (no
-    broker in the container) but the production entry point.
-
-    Reference: WordCountScalaExample.scala:111; AUTO_OFFSET_RESET earliest
-    (WordCountProcessorExample.scala:19) → startingOffsets."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return raw.selectExpr(
-        "CAST(key AS STRING) AS key",
-        "CAST(value AS STRING) AS value",
-        "timestamp",
-        "offset",
-    )
-
-
-def kafka_sink(df: DataFrame, topic: str, brokers: str, checkpoint: str):
-    """stream.to(topic) → Kafka sink (WordCountScalaExample.scala:117)."""
-    return (
-        df.selectExpr("CAST(key AS STRING) AS key", "CAST(value AS STRING) AS value")
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-    )
-
-
 def rate_stream(spark: SparkSession, rows_per_second: int = 100, num_keys: int = 8) -> DataFrame:
     """Synthetic load generator (Spark's rate source) in the canonical
     record shape (key/value/timestamp/offset) — the no-files-no-broker

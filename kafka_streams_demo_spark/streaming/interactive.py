@@ -10,8 +10,9 @@ Spark's idiomatic equivalent is the state data source reader (Spark 4):
 ANY streaming query's state store is queryable from its checkpoint as a
 DataFrame — no side-channel server inside the stream job, the same
 Catalyst scan path as every other table, and it works offline (after the
-query stopped) or between micro-batches of a live query. Point lookups
-are plain filters, so predicate pushdown/pruning apply.
+query stopped) or between micro-batches of a live query. ``state_get``
+is a plain filter over that scan; ``state_get_point`` routes a key to
+its one state partition and reads only that partition's files.
 
 Scale: the reader maps state-store partitions to scan tasks — a 100 TB
 RocksDB state reads like any partitioned table. No driver materialization
@@ -51,6 +52,17 @@ def state_store(
     return df.select("key.*", "value.*", "partition_id")
 
 
+def _check_key_fields(key: dict[str, object], key_schema) -> None:
+    """Raise ``ValueError`` unless ``key`` names exactly the store's key
+    fields (``key_schema``, the store's key StructType)."""
+    names = [f.name for f in key_schema.fields]
+    if sorted(key) != sorted(names):
+        raise ValueError(
+            f"key columns {sorted(key)} do not match the store's key "
+            f"fields {names}"
+        )
+
+
 def state_partition(
     spark: SparkSession,
     key: dict[str, object],
@@ -73,14 +85,7 @@ def state_partition(
     stops mattering."""
     probe = spark.createDataFrame([tuple(key.values())], list(key.keys()))
     if key_schema is not None:
-        names = [f.name for f in key_schema.fields]
-        missing = [n for n in names if n not in key]
-        extra = [n for n in key if n not in names]
-        if missing or extra:
-            raise ValueError(
-                f"key columns {sorted(key)} do not match the store's key "
-                f"fields {names}"
-            )
+        _check_key_fields(key, key_schema)
         cols = [
             F.col(f.name).cast(f.dataType).alias(f.name)
             for f in key_schema.fields
@@ -97,44 +102,24 @@ def state_get(
     spark: SparkSession,
     checkpoint: str,
     key: dict[str, object],
-    prune_partition: bool = True,
-    num_partitions: int | None = None,
     **kwargs,
 ) -> DataFrame:
     """``store.get(key)``: point lookup — ``key`` maps key-column name →
-    value (composite keys supported; any order — the hash follows the
-    store's own key-field order and types).
+    value (composite keys supported, any order). A key dict whose names
+    do not match the store's key fields raises ``ValueError`` up front
+    (schema only, no job) instead of silently returning nothing.
 
-    ``prune_partition`` additionally computes the ONE state partition the
-    key hashes to (``state_partition`` over the store's actual key
-    schema, partition count from the checkpoint's metadata — pass
-    ``num_partitions`` to skip that metadata read in a hot lookup loop)
-    and filters ``partition_id`` to it. Costs one metadata read (unless
-    supplied) + a 1-row hash job per call. Honesty note: today's state
-    source evaluates both filters AFTER the scan (no
-    SupportsPushDownFilters — the plan shows a codegen Filter directly
-    over the BatchScan, pinned in tests), so this bounds which partition
-    may EMIT rows, not which partitions are opened. For the true
-    single-partition read — one input partition, one partition's
-    snapshot+delta files — use :func:`state_get_point` (r12, VERDICT
-    r11 task 8), which rides the source's own
-    snapshotPartitionId/snapshotStartBatchId options; this function
-    remains the no-snapshot-yet fallback."""
+    The lookup is a filter over the :func:`state_store` scan and runs
+    no job of its own. The state source evaluates the filter AFTER the
+    scan (no SupportsPushDownFilters — the plan shows a codegen Filter
+    directly over the BatchScan, pinned in tests), so every partition is
+    opened. For the single-partition read — one input partition, one
+    partition's snapshot+delta files — use :func:`state_get_point`,
+    which falls back to this function while no snapshot exists."""
     kwargs.pop("flatten", None)  # lookups always flatten (filters need it)
     raw = state_store(spark, checkpoint, flatten=False, **kwargs)
+    _check_key_fields(key, raw.schema["key"].dataType)
     df = raw.select("key.*", "value.*", "partition_id")
-    if prune_partition:
-        if num_partitions is None:
-            meta = state_metadata(spark, checkpoint)
-            op = kwargs.get("operator_id", 0)
-            num_partitions = int(
-                meta.filter(F.col("operatorId") == op)
-                .select("numPartitions").first()[0]
-            )
-        p = state_partition(
-            spark, key, num_partitions, key_schema=raw.schema["key"].dataType
-        )
-        df = df.filter(F.col("partition_id") == F.lit(p))
     for col, val in key.items():
         df = df.filter(F.col(col) == F.lit(val))
     return df
@@ -252,7 +237,7 @@ def await_partition_snapshot(
                 f"within {timeout_s}s — drive the query under "
                 f"snapshot_eager(spark) (pins {sorted(SNAPSHOT_EAGER_CONFS)}) "
                 f"or raise timeout_s; without a snapshot state_get_point "
-                f"serves the partition-filtered full-scan fallback"
+                f"serves the full-scan fallback"
             )
         time.sleep(poll_s)
 
@@ -281,9 +266,9 @@ def state_get_point(
     deltas — the source REFUSES a snapshot read it cannot serve
     (CANNOT_READ_MISSING_SNAPSHOT_FILE, verified empirically), it never
     silently widens. When no snapshot exists yet this helper falls back
-    to :func:`state_get` (partition-filtered full scan) — correct,
-    just not single-partition; the fallback is visible in the plan
-    (32-partition scan vs 1)."""
+    to :func:`state_get` (filtered full scan) — correct, just not
+    single-partition; the fallback is visible in the plan (one scan
+    partition per state partition vs 1)."""
     raw = state_store(
         spark, checkpoint, operator_id=operator_id,
         store_name=store_name, flatten=False,
@@ -300,8 +285,7 @@ def state_get_point(
     ver = latest_partition_snapshot(checkpoint, p, operator_id, store_name)
     if ver is None:
         return state_get(
-            spark, checkpoint, key, num_partitions=num_partitions,
-            operator_id=operator_id,
+            spark, checkpoint, key, operator_id=operator_id,
             **({"store_name": store_name} if store_name else {}),
         )
     reader = (

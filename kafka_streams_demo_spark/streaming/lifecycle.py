@@ -26,7 +26,19 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
+
+
+def _await_or_stop(q: StreamingQuery, timeout_s: float) -> None:
+    """Wait for an availableNow drive to finish; on timeout stop it and
+    raise ``TimeoutError`` — a drive cut short would otherwise hand back
+    a truncated result and leave its query running."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not finish within "
+            f"{timeout_s}s; it was stopped"
+        )
 
 
 def run_available_now(
@@ -34,11 +46,12 @@ def run_available_now(
     output_mode: str = "update",
     name: str | None = None,
     checkpoint: str | None = None,
-    timeout_s: int = 120,
+    timeout_s: float = 120,
 ) -> DataFrame:
     """Run a streaming DataFrame to a memory sink with
     ``trigger(availableNow)`` and return the result table — the synchronous
-    pipe-records-through-the-DAG test path.
+    pipe-records-through-the-DAG test path. Raises ``TimeoutError`` (after
+    stopping the query) if the drive outlives ``timeout_s``.
 
     Accepts a ``Suppressed`` wrapper (operators/grouped.py): the wrapped
     plan runs in the append mode it mandates (emit-final-only windows),
@@ -57,7 +70,7 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    _await_or_stop(q, timeout_s)
     return spark.table(name)
 
 
@@ -67,7 +80,7 @@ def run_punctuated_until_settled(
     name: str | None = None,
     checkpoint: str | None = None,
     settle_batches: int = 2,
-    deadline_s: int = 300,
+    deadline_s: float = 300,
 ) -> DataFrame:
     """Drive a ProcessingTimeTimeout (wall-clock punctuator) plan and
     STOP it deterministically (r12).
@@ -89,7 +102,8 @@ def run_punctuated_until_settled(
     data batch), the query stops. Termination is event-driven (~the
     cost of the real batches), the wall-clock-timer semantics under
     test are fully exercised, and ``deadline_s`` is only the safety
-    backstop.
+    backstop: a drive that has not settled by then is stopped and
+    raises ``TimeoutError`` rather than returning a truncated prefix.
 
     Progress is read from ``q.recentProgress`` (retains ~100 events)
     keyed by batchId, so EVERY batch's numInputRows is observed exactly
@@ -106,6 +120,7 @@ def run_punctuated_until_settled(
     spark = out.sparkSession
     name = name or f"mem_{uuid.uuid4().hex[:8]}"
     checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
+    deadline = _time.monotonic() + deadline_s
     q = (
         out.writeStream.format("memory")
         .queryName(name)
@@ -114,10 +129,15 @@ def run_punctuated_until_settled(
         .option("checkpointLocation", checkpoint)
         .start()
     )
-    deadline = _time.monotonic() + deadline_s
     seen: set[int] = set()
     idle = 0
-    while _time.monotonic() < deadline and q.isActive:
+    while q.isActive:
+        if _time.monotonic() >= deadline:
+            q.stop()
+            raise TimeoutError(
+                f"streaming query {name} did not settle within "
+                f"{deadline_s}s; it was stopped"
+            )
         for p in q.recentProgress:
             bid = p.get("batchId")
             if bid is None or bid in seen:
@@ -141,10 +161,12 @@ def run_foreach_batch(
     fn: Callable[[DataFrame, int], None],
     output_mode: str = "update",
     checkpoint: str | None = None,
-    timeout_s: int = 120,
+    timeout_s: float = 120,
 ) -> None:
     """availableNow foreachBatch run — the KTable-materialization and
-    arbitrary-sink path (stream-table join timing per SURVEY §2f)."""
+    arbitrary-sink path (stream-table join timing per SURVEY §2f).
+    Raises ``TimeoutError`` (after stopping the query) if the drive
+    outlives ``timeout_s``."""
     checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
     q = (
         out.writeStream.foreachBatch(fn)
@@ -153,7 +175,7 @@ def run_foreach_batch(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    _await_or_stop(q, timeout_s)
 
 
 def clean_up(checkpoint_dir: str) -> None:
@@ -190,7 +212,7 @@ def materialize_ktable(
     key_col: str = "key",
     order_col: str = "offset",
     checkpoint: str | None = None,
-    timeout_s: int = 120,
+    timeout_s: float = 120,
 ) -> DataFrame:
     """Streaming KTable materialization: maintain a latest-per-key parquet
     snapshot via foreachBatch merge (SURVEY §1 design (b)).

@@ -587,11 +587,10 @@ def test_ngram_span_dedup_keeps_first_merges_overlaps(spark):
 
 
 def test_minhash_incremental_broadcast_gate(spark):
-    """VERDICT r5 #2: the delta broadcast is opt-in. Default leaves join
-    strategy to Catalyst/AQE (no forced BroadcastExchange when broadcast
-    is disabled — a huge ingest batch degrades to shuffle joins instead
-    of OOMing); broadcast_delta=True forces the hint for known-small
-    batches. Results are bit-identical either way."""
+    """VERDICT r5 #2: the delta is never force-broadcast. Join strategy
+    is Catalyst/AQE's (no forced BroadcastExchange when broadcast is
+    disabled — a huge ingest batch degrades to shuffle joins instead of
+    OOMing)."""
     from kafka_streams_demo_spark.functions.dedup import (
         minhash_index,
         minhash_lsh_pairs_incremental,
@@ -614,20 +613,11 @@ def test_minhash_incremental_broadcast_gate(spark):
         from kafka_streams_demo_spark.plans.explain import audit
 
         ungated = minhash_lsh_pairs_incremental(new, idx, docs, n=3, threshold=0.5)
-        forced = minhash_lsh_pairs_incremental(
-            new, idx, docs, n=3, threshold=0.5, broadcast_delta=True
-        )
-        a_un, a_f = audit(ungated), audit(forced)
-        # ungated: the delta-carrying joins (pair expansion, candidate
+        a_un = audit(ungated)
+        # the delta-carrying joins (pair expansion, candidate
         # verification) degrade to sort-merge — only the always-tiny hot
-        # outlier list broadcasts; forcing the hint converts them, so the
-        # forced plan carries strictly more broadcast joins and the
-        # ungated plan must contain SMJs at all
+        # outlier list broadcasts
         assert a_un.sort_merge_joins > 0, a_un.plan
-        assert a_f.sort_merge_joins < a_un.sort_merge_joins
-        assert a_f.broadcast_joins > a_un.broadcast_joins
-        key = lambda df: sorted((r["i"], r["j"], r["jaccard"]) for r in df.collect())
-        assert key(ungated) == key(forced)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
@@ -907,6 +897,21 @@ def test_embedding_incremental_equals_batch_restricted_to_delta(spark):
         new, old, threshold=0.5, max_block_size=1
     ).count() == 0
 
+    # a NaN-element new vector has no defined cosine: the batch run emits
+    # only the old×old pair, so the delta-touching restriction is empty
+    emb3 = spark.createDataFrame(
+        [(1, 0, [math.nan, 0.0, 1.0]), (2, 0, [1.0, 0.1, 0.0]),
+         (3, 0, [0.9, 0.1, 0.05])],
+        "vec_id long, label int, embedding array<float>",
+    )
+    batch3 = [(r["i"], r["j"]) for r in
+              embedding_cosine_pairs(emb3, threshold=0.5).collect()]
+    assert batch3 == [(2, 3)]
+    got3 = [tuple(r) for r in embedding_cosine_pairs_incremental(
+        emb3.filter("vec_id = 1"), emb3.filter("vec_id != 1"), threshold=0.5
+    ).collect()]
+    assert got3 == []
+
 
 def test_ngram_jaccard_incremental_equals_batch_restricted(spark):
     """Exact-Jaccard index+delta == the batch run restricted to pairs
@@ -1030,7 +1035,7 @@ def test_semdedup_cells_semantic_replay(spark):
     """Full semantic replay of semdedup_cells on the fixture corpus:
     a vector is dropped iff some same-cell neighbor with cosine >=
     threshold has a strictly smaller (ccos, id) key — verified pair by
-    pair in Python; plus checkpoint on/off parity and determinism."""
+    pair in Python."""
     import math
 
     from kafka_streams_demo_spark.functions.dedup import semdedup_cells
@@ -1045,10 +1050,6 @@ def test_semdedup_cells_semantic_replay(spark):
     got = semdedup_cells(emb, threshold=tau, max_cell_size=None)
     rows = {r["vec_id"]: r for r in got.collect()}
     assert len(rows) == 200
-
-    lazy = semdedup_cells(emb, threshold=tau, max_cell_size=None,
-                          checkpoint=False)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, lazy.collect()))
 
     cents = ivf_centroids(emb)
     asg = {r["vid"]: r["cell"] for r in ivf_assign(emb, cents, n=1).collect()}

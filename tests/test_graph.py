@@ -209,18 +209,23 @@ def test_triangle_incremental_equals_rebuild(spark):
         assert inc == full, frac
 
 
-def test_triangles_bloom_prefilter_parity(spark):
+def test_triangles_match_brute_force_count(spark):
+    """Per-node triangle counts on a random graph equal a brute-force
+    count over every node triple."""
+    import itertools
     import random
-
-    from kafka_streams_demo_spark.functions.graph import triangle_counts as tc
+    from collections import Counter
 
     rng = random.Random(11)
     und = sorted({(a, b) for a in range(15) for b in range(15)
                   if a < b and rng.random() < 0.3})
-    df = _edges(spark, und, cols=("a", "b"))
-    plain = sorted(map(tuple, tc(df, bloom_prefilter=False).collect()))
-    bloomed = sorted(map(tuple, tc(df, bloom_prefilter=True).collect()))
-    assert plain == bloomed and plain
+    edges = set(und)
+    want = Counter()
+    for x, y, z in itertools.combinations(range(15), 3):
+        if {(x, y), (x, z), (y, z)} <= edges:
+            want.update((x, y, z))
+    got = dict(map(tuple, triangle_counts(_edges(spark, und, cols=("a", "b"))).collect()))
+    assert got == dict(want) and got
 
 
 def test_pagerank_plain_sum_parity_at_6dp(spark):

@@ -4,6 +4,8 @@ Lloyd refinement's monotone quantization error. The catalog pins the
 encode/ADC pipelines cross-engine (pq_encode_corpus / ann_pq_adc_topk
 hash gates); these tests pin the math and the plan shape."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -39,10 +41,9 @@ def test_codebook_shapes_and_determinism(spark):
 
 
 def test_encode_codes_in_range_and_no_shuffle(spark):
-    """Encode must be a map-only pass: codebooks ride as a literal, the
-    argmin is row-local, the only row expansion is the posexplode — the
-    physical plan contains NO Exchange (the 100 TB contract: a corpus
-    re-encode never shuffles)."""
+    """Encode must be a map-only pass: codebooks are broadcast, the
+    argmin is row-local — the physical plan contains NO Exchange (the
+    100 TB contract: a corpus re-encode never shuffles)."""
     emb = load_table(spark, "embeddings", SF)
     cbs = pq_sample_codebooks(emb, dim=64, m=8, k=16)
     codes = pq_encode(emb, cbs, dim=64, m=8, k=16)
@@ -280,42 +281,76 @@ def test_ivf_pq_probes_only_assigned_cells(spark):
         assert full[(r["q_id"], r["n_id"])] == r["adist"]
 
 
+def _ref_codes(vec, codebook_rows, m):
+    """Plain-Python reference encode: per subspace, the squared distance
+    to each codeword as a sequential left fold, rounded HALF_UP to 6 dp
+    like Spark's round; argmin with ties to the smallest code; −1 when
+    no codeword has a defined distance (a NULL or NaN element)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    ds = len(vec) // m
+    codes = {}
+    for s in range(m):
+        best, code = math.inf, -1
+        for r in sorted(codebook_rows, key=lambda r: r["code"]):
+            if r["sub"] != s:
+                continue
+            acc = 0.0
+            for t in range(ds):
+                x = vec[s * ds + t]
+                d = (math.nan if x is None else x) - r["cvec"][t]
+                acc += d * d
+            if math.isnan(acc):
+                continue
+            d2 = float(Decimal(repr(acc)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+            if d2 < best:
+                best, code = d2, r["code"]
+        codes[s] = code
+    return codes
+
+
 def test_pq_encode_arrow_branch_parity_and_no_exchange(spark):
-    """Above PQ_LITERAL_MAX_ELEMENTS the encode must switch to the Arrow
-    kernel (no codebook SQL literal) and emit EXACTLY the literal fold's
-    codes — same argmin ties, same keep_cols passthrough; both plans
-    Exchange-free."""
+    """The encode must emit exactly the codes of a plain-Python
+    sequential-sum argmin (6-dp HALF_UP rounding, ties to the smaller
+    code, −1 on no defined distance), carry keep_cols through, and plan
+    no Exchange."""
     emb = load_table(spark, "embeddings", SF).withColumn("cell", F.col("label"))
     cbs = pq_sample_codebooks(emb, dim=64, m=8, k=16)
-    fold = pq_encode(emb, cbs, dim=64, m=8, k=16, keep_cols=("cell",))
-    arrow = pq_encode(
-        emb, cbs, dim=64, m=8, k=16, keep_cols=("cell",), literal_max_elements=0
+    codes = pq_encode(emb, cbs, dim=64, m=8, k=16, keep_cols=("cell",))
+    plan = codes._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    cb_rows = cbs.collect()
+    want = sorted(
+        (r["vec_id"], r["cell"], s, c)
+        for r in emb.collect()
+        for s, c in _ref_codes(list(r["embedding"]), cb_rows, 8).items()
     )
-    plan_a = arrow._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan_a
-    assert "named_struct" not in plan_a
-    assert sorted(map(tuple, fold.collect())) == sorted(map(tuple, arrow.collect()))
+    assert sorted(map(tuple, codes.collect())) == want
 
-    # the exact-tie fixture must break to the smaller code in BOTH branches
-    cbs2 = spark.createDataFrame(
+    # exact ties break to the smaller code; a NULL element gives −1 in
+    # its subspace only
+    cbs2 = _cb_df(
+        spark,
         [(0, 0, [0.0, 0.0]), (0, 1, [1.0, 1.0]),
          (1, 0, [2.0, 2.0]), (1, 1, [3.0, 3.0])],
-        "sub int, code int, cvec array<double>",
     )
-    tied = spark.createDataFrame(
-        [(2, [0.5, 0.5, 2.5, 2.5])], "vec_id long, embedding array<float>"
-    )
+    vecs = [(2, [0.5, 0.5, 2.5, 2.5]), (3, [None, 0.5, 2.5, 2.5])]
+    tied = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
     got = {
         (r["vec_id"], r["sub"]): r["code"]
-        for r in pq_encode(tied, cbs2, dim=4, m=2, k=2, literal_max_elements=0).collect()
+        for r in pq_encode(tied, cbs2, dim=4, m=2, k=2).collect()
     }
-    assert got == {(2, 0): 0, (2, 1): 0}
+    cb2_rows = cbs2.collect()
+    assert got == {
+        (i, s): c for i, v in vecs for s, c in _ref_codes(v, cb2_rows, 2).items()
+    }
+    assert got == {(2, 0): 0, (2, 1): 0, (3, 0): -1, (3, 1): 0}
 
 
 def test_pq_encode_malformed_vector_guards(spark):
-    """ADVICE r8: a vector shorter than dim must FAIL the encode
-    (assert_true), not silently emit code −1; and a vector with a NULL
-    element (whose codes legitimately go −1) must be EXCLUDED from ADC
+    """ADVICE r8: a vector shorter than dim must FAIL the encode (the
+    kernel's length check), not silently emit code −1; and a vector with
+    a NULL element (whose codes legitimately go −1) must be EXCLUDED from ADC
     ranking by the exactly-m-entries group guard, not ranked with a
     spuriously small partial sum."""
     cbs = _cb_df(

@@ -14,6 +14,17 @@ from kafka_streams_demo_spark.sources.registry import load_table
 SF = "/root/testdata/sf0.001"
 
 
+def _arrow(monkeypatch, build, *args, **kwargs):
+    """Build an IVF assignment frame with IVF_LITERAL_MAX_ELEMENTS at 0,
+    so it takes the Arrow kernel branch (the branch is chosen when the
+    frame is built)."""
+    from kafka_streams_demo_spark.functions import similarity
+
+    with monkeypatch.context() as mp:
+        mp.setattr(similarity, "IVF_LITERAL_MAX_ELEMENTS", 0)
+        return build(*args, **kwargs)
+
+
 def test_cosine_known_values(spark):
     df = spark.createDataFrame(
         [(1, [1.0, 0.0], [0.0, 1.0]), (2, [1.0, 0.0], [1.0, 0.0]), (3, [1.0, 2.0], [2.0, 4.0])],
@@ -398,7 +409,7 @@ def test_ivf_assign_fold_is_bit_equal_to_window_and_shuffle_free(spark):
     cents.unpersist()
 
 
-def test_ivf_assign_arrow_branch_parity_and_no_exchange(spark):
+def test_ivf_assign_arrow_branch_parity_and_no_exchange(spark, monkeypatch):
     """Above IVF_LITERAL_MAX_ELEMENTS the n=1 assignment must switch to
     the Arrow broadcast-matrix kernel (no SQL literal — production nlist
     would embed MBs of plan text) and return EXACTLY what the literal
@@ -412,7 +423,7 @@ def test_ivf_assign_arrow_branch_parity_and_no_exchange(spark):
     emb = load_table(spark, "embeddings", SF)
     cents = ivf_centroids(emb).persist()
     fold = ivf_assign(emb, cents, n=1)
-    arrow = ivf_assign(emb, cents, n=1, literal_max_elements=0)
+    arrow = _arrow(monkeypatch, ivf_assign, emb, cents, n=1)
     plan_f = fold._jdf.queryExecution().executedPlan().toString()
     plan_a = arrow._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan_f
@@ -429,7 +440,7 @@ def test_ivf_assign_arrow_branch_parity_and_no_exchange(spark):
     tied = spark.createDataFrame(
         [(1, [1.0, 1.0])], "vec_id long, embedding array<float>"
     )
-    got2 = ivf_assign(tied, cents2, n=1, literal_max_elements=0).collect()
+    got2 = _arrow(monkeypatch, ivf_assign, tied, cents2, n=1).collect()
     assert [(r["vid"], r["cell"]) for r in got2] == [(1, 3)]
     cents.unpersist()
 
@@ -505,7 +516,7 @@ def test_ann_tier_recall_floors_on_clustered_fixture(spark):
     assert r_lsh >= 0.05, r_lsh       # 8 hyperplanes: breakage canary only
 
 
-def test_ivf_assign_date_and_timestamp_cells(spark):
+def test_ivf_assign_date_and_timestamp_cells(spark, monkeypatch):
     """ADVICE r8: _centroid_literal rendered non-string cells bare, so
     DATE/TIMESTAMP cells produced invalid literals (CAST(2024-01-01 AS
     DATE) parses as integer arithmetic) — the n=1 fast path silently
@@ -536,13 +547,13 @@ def test_ivf_assign_date_and_timestamp_cells(spark):
     fold = sorted((r["vid"], r["cell"]) for r in ivf_assign(vecs, cents, n=1).collect())
     arrow = sorted(
         (r["vid"], r["cell"])
-        for r in ivf_assign(vecs, cents, n=1, literal_max_elements=0).collect()
+        for r in _arrow(monkeypatch, ivf_assign, vecs, cents, n=1).collect()
     )
     assert fold == want == arrow
     assert fold[0] == (1, dt.date(2024, 1, 1)) and fold[1] == (2, dt.date(2024, 6, 15))
 
 
-def test_ivf_assign_degenerate_vectors_agree_across_branches(spark):
+def test_ivf_assign_degenerate_vectors_agree_across_branches(spark, monkeypatch):
     """Degenerate inputs must agree between the fold and the Arrow
     kernel, replaying the SQL semantics exactly: a NULL vector or a
     NULL ELEMENT keeps the fold's NULL-cell init (every cosine SQL
@@ -568,12 +579,12 @@ def test_ivf_assign_degenerate_vectors_agree_across_branches(spark):
     fold = {r["vid"]: r["cell"] for r in ivf_assign(vecs, cents, n=1).collect()}
     arrow = {
         r["vid"]: r["cell"]
-        for r in ivf_assign(vecs, cents, n=1, literal_max_elements=0).collect()
+        for r in _arrow(monkeypatch, ivf_assign, vecs, cents, n=1).collect()
     }
     assert fold == arrow == {1: 1, 2: None, 3: 2, 4: None, 5: 1}
 
 
-def test_ivf_assign_wrong_length_vectors_agree_across_branches(spark):
+def test_ivf_assign_wrong_length_vectors_agree_across_branches(spark, monkeypatch):
     """ADVICE r9: a non-NULL vector whose length != dim must yield a
     NULL cell on BOTH branches — the fold's zip_with pads the shorter
     side with NULL (every cosine goes SQL NULL, init survives); the
@@ -596,7 +607,7 @@ def test_ivf_assign_wrong_length_vectors_agree_across_branches(spark):
     fold = {r["vid"]: r["cell"] for r in ivf_assign(vecs, cents, n=1).collect()}
     arrow = {
         r["vid"]: r["cell"]
-        for r in ivf_assign(vecs, cents, n=1, literal_max_elements=0).collect()
+        for r in _arrow(monkeypatch, ivf_assign, vecs, cents, n=1).collect()
     }
     assert fold == arrow == {1: 1, 2: None, 3: None, 4: None}
 
@@ -664,7 +675,7 @@ def test_round6_block_exact_replay_beyond_mantissa_magnitude(spark):
     assert list(got) == want
 
 
-def test_kmeans_d2_assign_arrow_matches_fold(spark):
+def test_kmeans_d2_assign_arrow_matches_fold(spark, monkeypatch):
     """The trainer's d2-argmin has the same two-branch dispatch as
     ivf_assign (r12): centroid literal + codegen fold below the element
     cap, Arrow broadcast-matrix kernel above it (production nlist). On
@@ -693,7 +704,7 @@ def test_kmeans_d2_assign_arrow_matches_fold(spark):
     )
 
     fold = _kmeans_assign_d2(vecs, cents)
-    arrow = _kmeans_assign_d2(vecs, cents, literal_max_elements=0)
+    arrow = _arrow(monkeypatch, _kmeans_assign_d2, vecs, cents)
     got_f = {r["vid"]: r["cell"] for r in fold.collect()}
     got_a = {r["vid"]: r["cell"] for r in arrow.collect()}
     assert got_f == got_a

@@ -104,6 +104,27 @@ def test_materialize_ktable_snapshot(spark, tmp_path):
     assert len(got) == 6
 
 
+@pytest.mark.parametrize("drive", ["available_now", "foreach_batch", "punctuated"])
+def test_drive_past_timeout_stops_query_and_raises(spark, tmp_path, drive):
+    """A drive that outlives its timeout (or deadline) must stop its
+    query and raise TimeoutError naming the query and the timeout —
+    never hand back a truncated result with the query still running."""
+    from kafka_streams_demo_spark.streaming.lifecycle import run_foreach_batch
+
+    src = _as_stream(spark, fixtures.kv_string_stream(spark), tmp_path, "kv")
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError, match=r"streaming query \S+ did not .* 0\.001s"):
+        if drive == "available_now":
+            run_available_now(src, output_mode="append", timeout_s=0.001)
+        elif drive == "foreach_batch":
+            run_foreach_batch(src, lambda df, bid: None, output_mode="append",
+                              timeout_s=0.001)
+        else:
+            run_punctuated_until_settled(src, output_mode="append",
+                                         deadline_s=0.001)
+    assert {q.id for q in spark.streams.active} <= before
+
+
 def test_listener_and_cleanup(spark, tmp_path):
     """StreamingQueryListener parity + cleanUp (checkpoint reset)."""
     listener = CollectingListener()
@@ -682,6 +703,24 @@ def test_interactive_query_reads_aggregation_state(spark, tmp_path):
     point = state_get(spark, ck, {"key": "k3"}).collect()
     assert len(point) == 1 and point[0]["count"] == 20
 
+    # the lookup costs exactly the jobs of the filtered scan it is — no
+    # metadata read or partition-hash probe of its own
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    tag = uuid.uuid4().hex[:8]
+    want = jobs(f"scan_{tag}", lambda: state_store(spark, ck)
+                .filter(F.col("key") == "k3").collect())
+    got = jobs(f"get_{tag}", lambda: state_get(spark, ck, {"key": "k3"}).collect())
+    assert want >= 1 and got == want, (got, want)
+
     meta = state_metadata(spark, ck).collect()
     assert any(r["stateStoreName"] == "default" for r in meta)
 
@@ -689,11 +728,12 @@ def test_interactive_query_reads_aggregation_state(spark, tmp_path):
 def test_interactive_point_lookup_partition_math_and_plan(spark, tmp_path):
     """VERDICT r4 #8: store.get(key) must stay a LOOKUP at 100 TB state.
     Pins (a) the partition computation — pmod(F.hash(keys), n) equals the
-    partition_id the state source reports for EVERY key, so a deployment
-    can route a single-partition read; (b) the plan shape — one codegen
-    Filter (key AND partition_id) directly over the StateTable BatchScan,
-    zero Exchange, zero join (the source has no filter pushdown today;
-    the filter sits post-scan, and this test documents exactly that)."""
+    partition_id the state source reports for EVERY key, so
+    state_get_point can route a single-partition read; (b) the plan
+    shape — one codegen key Filter directly over the StateTable
+    BatchScan, zero Exchange, zero join (the source has no filter
+    pushdown today; the filter sits post-scan, and this test documents
+    exactly that)."""
     from pyspark.sql import functions as F
 
     from kafka_streams_demo_spark.streaming.interactive import (
@@ -724,24 +764,24 @@ def test_interactive_point_lookup_partition_math_and_plan(spark, tmp_path):
         .executedPlan().toString()
     assert "StateTable" in plan
     assert "Exchange" not in plan and "Join" not in plan
-    assert "partition_id" in plan  # the partition restriction is in-plan
     # the key filter exists and is the codegen'd post-scan filter — the
     # source pushes nothing today; if PushedFilters ever appears here the
     # docstring's honesty note should flip to claim real pruning
     assert "Filter" in plan and "PushedFilters" not in plan
 
-    # prune_partition=False keeps the plain filter-only lookup working
-    plain = state_get(spark, ck, {"key": "k7"}, prune_partition=False).collect()
-    assert [tuple(r) for r in plain] == [tuple(r) for r in got]
-
 
 def test_interactive_point_lookup_int_key_types(spark, tmp_path):
-    """Review r5: the probe hash must use the STORE's key types, not what
-    Python literals infer — Murmur3 hashes int32 and int64 encodings
-    differently, so an IntegerType store key probed as a Python int
-    (inferred long) routed to the wrong partition and the default
-    partition prune silently emptied the lookup."""
-    from kafka_streams_demo_spark.streaming.interactive import state_get
+    """Review r5: an IntegerType store key looked up with Python ints
+    (inferred long) must find every key, not silently return nothing;
+    the partition probe state_get_point routes by must hash with the
+    STORE's key types (Murmur3 hashes int32 and int64 differently); a
+    key dict that does not name the store's key fields must fail."""
+    from kafka_streams_demo_spark.streaming.interactive import (
+        state_get,
+        state_metadata,
+        state_partition,
+        state_store,
+    )
 
     src = tmp_path / "iq_int_src"
     ck = str(tmp_path / "iq_int_ck")
@@ -756,14 +796,16 @@ def test_interactive_point_lookup_int_key_types(spark, tmp_path):
     for probe in range(23):
         got = state_get(spark, ck, {"k": probe}).collect()
         assert len(got) == 1, f"int-key lookup emptied for k={probe}"
+    key_schema = state_store(spark, ck, flatten=False).schema["key"].dataType
+    n = state_metadata(spark, ck).select("numPartitions").first()[0]
+    for r in state_store(spark, ck).select("k", "partition_id").collect():
+        assert state_partition(
+            spark, {"k": r["k"]}, n, key_schema=key_schema
+        ) == r["partition_id"], r
     # mismatched key-column names fail loudly, not silently empty
     import pytest as _pytest
     with _pytest.raises(ValueError, match="key fields"):
-        state_get(spark, ck, {"wrong": 1}).collect()
-    # num_partitions passthrough skips the metadata read, same result
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    got = state_get(spark, ck, {"k": 7}, num_partitions=n).collect()
-    assert len(got) == 1
+        state_get(spark, ck, {"wrong": 1})
 
 
 def test_interactive_query_reads_processor_state(spark, tmp_path):
