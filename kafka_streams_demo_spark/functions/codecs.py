@@ -148,7 +148,7 @@ def _make_gif_codec():
     with deferred clear, interlace reordering, local color tables);
     the encoder emits the literal-only LZW subset (a clear code before
     every pixel code keeps the code width fixed — valid per the spec,
-    trades ratio for simplicity, exactly like the snappy writer).
+    trades ratio for simplicity).
     By-value closures for worker safety, same as the other codecs."""
 
     def _lzw_decode(data: bytes, min_code_size: int) -> list:

@@ -370,10 +370,10 @@ def from_avro_df(
 # file-metadata map (avro.schema + optional avro.codec), 16-byte sync
 # marker, then data blocks of (record-count, byte-size, records, sync).
 # Codecs supported here: null, deflate (raw RFC-1951 — stdlib zlib),
-# snappy (from-scratch per the public snappy format description; Avro's
-# snappy blocks carry a 4-byte big-endian CRC32 of the uncompressed
-# data), and bzip2/xz (stdlib bz2/lzma) — 5 of the spec's 6 codecs;
-# only zstandard (no stdlib impl) remains unsupported.
+# snappy (pyarrow provides the codec; Avro's snappy blocks carry a
+# 4-byte big-endian CRC32 of the uncompressed data), and bzip2/xz
+# (stdlib bz2/lzma) — 5 of the spec's 6 codecs; zstandard remains
+# unsupported.
 
 _OCF_MAGIC = b"Obj\x01"
 
@@ -390,103 +390,37 @@ def _encode_map(meta: dict[str, bytes]) -> bytes:
     return bytes(out)
 
 
-def _make_snappy_codec():
-    """Snappy (de)compression as by-value closures, written from the public
-    snappy format description (varint uncompressed length, then literal /
-    copy-1 / copy-2 / copy-4 elements). OCF files in the wild are mostly
-    snappy, and this container has no snappy library — so the decoder
-    implements the FULL element grammar (including overlapping RLE-style
-    copies), while the compressor emits the literal-only subset (a valid
-    snappy stream that simply doesn't compress; correctness over ratio)."""
+def _make_pyarrow_snappy():
+    """Snappy (de)compression through ``pyarrow.Codec("snappy")``, as
+    by-value closures (worker-safe, same rationale as _make_binary_codec).
+    The decoder checks the stream's varint length before pyarrow allocates
+    it: a 3-byte copy element yields at most 64 bytes, so a declared length
+    above 22x the input cannot be produced."""
 
     def snappy_decompress(data: bytes) -> bytes:
-        try:
-            return _snappy_decompress_unchecked(data)
-        except IndexError as exc:  # any read past the end = truncated input
-            raise ValueError("corrupt snappy stream: truncated input") from exc
+        import pyarrow as pa
 
-    def _snappy_decompress_unchecked(data: bytes) -> bytes:
-        data = bytes(data)
-        pos, n, shift = 0, 0, 0
-        while True:  # little-endian varint: uncompressed length
-            b = data[pos]
-            pos += 1
-            n |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-        out = bytearray()
-        while pos < len(data):
-            tag = data[pos]
-            pos += 1
-            typ = tag & 3
-            if typ == 0:  # literal
-                ln = tag >> 2
-                if ln >= 60:  # 60-63: length-1 in the next 1-4 bytes
-                    nb = ln - 59
-                    ln = int.from_bytes(data[pos:pos + nb], "little")
-                    pos += nb
-                ln += 1
-                out += data[pos:pos + ln]
-                pos += ln
-                continue
-            if typ == 1:  # copy, 1-byte offset (len 4-11, 11-bit offset)
-                ln = ((tag >> 2) & 0x7) + 4
-                off = ((tag >> 5) << 8) | data[pos]
-                pos += 1
-            elif typ == 2:  # copy, 2-byte little-endian offset
-                ln = (tag >> 2) + 1
-                off = int.from_bytes(data[pos:pos + 2], "little")
-                pos += 2
-            else:  # copy, 4-byte little-endian offset
-                ln = (tag >> 2) + 1
-                off = int.from_bytes(data[pos:pos + 4], "little")
-                pos += 4
-            if off == 0 or off > len(out):
-                raise ValueError("corrupt snappy stream: copy offset out of range")
-            start = len(out) - off
-            if off >= ln:
-                out += out[start:start + ln]
-            else:  # overlapping copy repeats bytes as they are produced
-                for i in range(ln):
-                    out.append(out[start + i])
-        if len(out) != n:
-            raise ValueError(
-                f"corrupt snappy stream: expected {n} bytes, produced {len(out)}"
-            )
-        return bytes(out)
+        data = bytes(data)  # little-endian varint (≤ 5 bytes): uncompressed length
+        end = next((i for i, b in enumerate(data[:5]) if b < 0x80), None)
+        if end is None:
+            raise ValueError("corrupt snappy stream: bad length header")
+        n = sum((b & 0x7F) << (7 * i) for i, b in enumerate(data[:end + 1]))
+        if n > 22 * len(data):
+            raise ValueError(f"corrupt snappy stream: declared {n} bytes from {len(data)}")
+        try:
+            return pa.Codec("snappy").decompress(data, decompressed_size=n, asbytes=True)
+        except (OSError, pa.ArrowInvalid) as exc:
+            raise ValueError(f"corrupt snappy stream: {exc}") from exc
 
     def snappy_compress(data: bytes) -> bytes:
-        data = bytes(data)
-        out = bytearray()
-        n = len(data)
-        while n >= 0x80:
-            out.append((n & 0x7F) | 0x80)
-            n >>= 7
-        out.append(n)
-        pos = 0
-        while pos < len(data):  # literal elements, ≤2^32 each by class 63
-            chunk = data[pos:pos + (1 << 24)]
-            ln = len(chunk) - 1
-            if ln < 60:
-                out.append(ln << 2)
-            elif ln < (1 << 8):
-                out.append(60 << 2)
-                out += ln.to_bytes(1, "little")
-            elif ln < (1 << 16):
-                out.append(61 << 2)
-                out += ln.to_bytes(2, "little")
-            else:
-                out.append(62 << 2)
-                out += ln.to_bytes(3, "little")
-            out += chunk
-            pos += len(chunk)
-        return bytes(out)
+        import pyarrow as pa
+
+        return pa.Codec("snappy").compress(bytes(data), asbytes=True)
 
     return snappy_compress, snappy_decompress
 
 
-_snappy_compress, _snappy_decompress = _make_snappy_codec()
+_snappy_compress, _snappy_decompress = _make_pyarrow_snappy()
 
 
 def _make_ocf_codec():

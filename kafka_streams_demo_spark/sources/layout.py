@@ -5,7 +5,10 @@ is the LAYOUT half of the design: the corpus is written ONCE partitioned
 by its IVF cell, so a probe for ``nprobe`` cells scans only those
 directories — partition pruning eliminates the other |cells|-nprobe
 fractions of the data before any I/O happens. The same helper serves any
-categorical partition key (date, language, source bucket).
+categorical partition key (date, language, source bucket), and
+``write_range_clustered`` tightens one column's row-group statistics.
+Multi-column clustering is ``functions/layout.py:zorder_layout``: write
+its output to get row-group statistics that prune every z-ordered column.
 
 tests/test_scale_tools.py asserts the pruning actually reaches the scan
 (PartitionFilters on the FileScan, not a post-scan Filter).
@@ -41,62 +44,6 @@ def write_range_clustered(
     (
         df.repartitionByRange(files, F.col(cluster_col))
         .sortWithinPartitions(cluster_col)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def zvalue(a, b, bits: int = 16):
-    """Morton (z-order) interleave of two non-negative ints, ``bits`` bits
-    each → one 2·bits-bit locality key. Pure column bit-math (shift/or per
-    bit — unrolled, stays in codegen); inputs must already be quantized to
-    [0, 2^bits). Interleaving means a range-cluster on the z-value keeps
-    BOTH dimensions locally narrow per file/row-group, where clustering on
-    (a, b) lexicographically leaves b's stats full-width in every file."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    one = F.lit(1).cast("long")
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = z.bitwiseOR(
-            F.shiftleft(F.shiftright(a, i).bitwiseAND(one), 2 * i)
-        ).bitwiseOR(F.shiftleft(F.shiftright(b, i).bitwiseAND(one), 2 * i + 1))
-    return z
-
-
-def quantize(col, lo, hi, bits: int = 16):
-    """Affine-quantize a numeric/timestamp column into [0, 2^bits) for
-    ``zvalue``. lo/hi are python scalars in the column's native units."""
-    col = F.col(col) if isinstance(col, str) else col
-    span = float(hi - lo)
-    q = ((col.cast("double") - float(lo)) / span * ((1 << bits) - 1))
-    return F.least(
-        F.lit((1 << bits) - 1).cast("long"),
-        F.greatest(F.lit(0).cast("long"), F.round(q, 0).cast("long")),
-    )
-
-
-def write_zorder_clustered(
-    df: DataFrame,
-    path: str,
-    dims: list[tuple],
-    files: int = 8,
-    bits: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-cluster on two dimensions before writing: quantize each
-    ``(col, lo, hi)`` dim, Morton-interleave, range-cluster on the
-    z-value. Predicates on EITHER dimension then skip most row-groups
-    (range-clustering on one column only serves that column).
-    tests/test_scale_tools.py measures per-file stat spans on both dims
-    against a single-column clustering."""
-    (a, alo, ahi), (b, blo, bhi) = dims
-    z = zvalue(quantize(a, alo, ahi, bits), quantize(b, blo, bhi, bits), bits)
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
         .write.mode(mode)
         .parquet(path)
     )

@@ -15,18 +15,52 @@ Reference mapping (SURVEY §2i):
 
 The availableNow harness is PySpark's TopologyTestDriver equivalent
 (SURVEY §3 EP3): file source → transform → memory sink, synchronously
-drained.
+drained. Every drive (here and in tools/) starts through
+``_start_available_now`` and finishes in one of two waits:
+``_await_or_stop`` for a query that drains and terminates by itself, and
+``_await_settled`` for a wall-clock punctuator plan, which never does.
 """
 
 from __future__ import annotations
 
 import shutil
 import tempfile
+import time
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
+
+
+def _unsuppress(out, output_mode: str) -> tuple[DataFrame, str]:
+    """A ``Suppressed`` wrapper (operators/grouped.py) runs in the append
+    mode it mandates (emit-final-only windows), overriding ``output_mode``."""
+    if hasattr(out, "output_mode") and hasattr(out, "df"):
+        return out.df, out.output_mode
+    return out, output_mode
+
+
+def _start_available_now(
+    out: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    output_mode: str = "update",
+    checkpoint: str | None = None,
+    name: str | None = None,
+) -> StreamingQuery:
+    """Start ``out`` under ``trigger(availableNow)``. ``sink`` is a
+    foreachBatch function or a sink format ("memory", "noop"); ``name``
+    names the query (and so the memory sink's table)."""
+    writer = out.writeStream
+    writer = writer.foreachBatch(sink) if callable(sink) else writer.format(sink)
+    if name:
+        writer = writer.queryName(name)
+    return (
+        writer.outputMode(output_mode)
+        .option("checkpointLocation", checkpoint or tempfile.mkdtemp(prefix="ckpt_"))
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _await_or_stop(q: StreamingQuery, timeout_s: float) -> None:
@@ -41,6 +75,49 @@ def _await_or_stop(q: StreamingQuery, timeout_s: float) -> None:
         )
 
 
+def _await_settled(q: StreamingQuery, settle_batches: int = 2,
+                   deadline_s: float = 300) -> None:
+    """Wait until a drive has settled, then stop it between micro-batches.
+
+    Under a processing-time punctuator ``trigger(availableNow)`` never
+    terminates: every timer fire re-registers the timer, so the query
+    spins no-data batches until something stops it. Settled means
+    ``settle_batches`` CONSECUTIVE progress events with zero input rows:
+    every source file was consumed (so every data batch committed) and
+    at least that many pure timer batches ran after the last data batch
+    (so every live key's timer fired). Progress is read from
+    ``q.recentProgress`` keyed by batchId, so every batch is observed
+    exactly, however fast it runs. The stop waits for
+    ``status["isTriggerActive"]`` to read false, so it lands between
+    micro-batches rather than inside one that is writing state or a
+    broadcast; availableNow starts the next trigger at once, so it can
+    still catch that trigger's first step. A drive that has not settled within
+    ``deadline_s`` is stopped and raises ``TimeoutError`` rather than
+    returning a truncated prefix; a query that failed re-raises its
+    error."""
+    deadline = time.monotonic() + deadline_s
+    seen: set[int] = set()
+    idle = 0
+    while q.isActive:
+        if time.monotonic() >= deadline:
+            q.stop()
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not settle within "
+                f"{deadline_s}s; it was stopped"
+            )
+        if idle < settle_batches:
+            for p in q.recentProgress:
+                if p.get("batchId") is None or p["batchId"] in seen:
+                    continue
+                seen.add(p["batchId"])
+                idle = idle + 1 if not p.get("numInputRows") else 0
+            time.sleep(0.05)
+        elif not q.status["isTriggerActive"]:
+            break
+    q.stop()
+    q.awaitTermination()
+
+
 def run_available_now(
     out: DataFrame,
     output_mode: str = "update",
@@ -51,27 +128,12 @@ def run_available_now(
     """Run a streaming DataFrame to a memory sink with
     ``trigger(availableNow)`` and return the result table — the synchronous
     pipe-records-through-the-DAG test path. Raises ``TimeoutError`` (after
-    stopping the query) if the drive outlives ``timeout_s``.
-
-    Accepts a ``Suppressed`` wrapper (operators/grouped.py): the wrapped
-    plan runs in the append mode it mandates (emit-final-only windows),
-    overriding ``output_mode``."""
-    if hasattr(out, "output_mode") and hasattr(out, "df"):
-        output_mode = out.output_mode
-        out = out.df
-    spark = out.sparkSession
+    stopping the query) if the drive outlives ``timeout_s``. Accepts a
+    ``Suppressed`` wrapper."""
+    out, output_mode = _unsuppress(out, output_mode)
     name = name or f"mem_{uuid.uuid4().hex[:8]}"
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_stop(q, timeout_s)
-    return spark.table(name)
+    _await_or_stop(_start_available_now(out, "memory", output_mode, checkpoint, name), timeout_s)
+    return out.sparkSession.table(name)
 
 
 def run_punctuated_until_settled(
@@ -82,78 +144,15 @@ def run_punctuated_until_settled(
     settle_batches: int = 2,
     deadline_s: float = 300,
 ) -> DataFrame:
-    """Drive a ProcessingTimeTimeout (wall-clock punctuator) plan and
-    STOP it deterministically (r12).
-
-    ``trigger(availableNow)`` never self-terminates under a short
-    punctuation interval: every timer fire re-registers the timer, so
-    "available work" never drains and the query spins no-data batches
-    until something external stops it. The previous path leaned on
-    ``awaitTermination(120)`` expiring — 120 s of wall time PER DRIVE
-    regardless of data (found while profiling the 122 s streaming-tier
-    row), and a latent liveness hazard: had the DATA batches ever taken
-    longer than the timeout under load, the drive would have returned a
-    truncated prefix.
-
-    This helper watches query progress instead: once ``settle_batches``
-    CONSECUTIVE progress events carry zero input rows (all source files
-    consumed — so every data batch committed — and ≥ that many pure
-    timer batches ran, so every live key's timer fired after the last
-    data batch), the query stops. Termination is event-driven (~the
-    cost of the real batches), the wall-clock-timer semantics under
-    test are fully exercised, and ``deadline_s`` is only the safety
-    backstop: a drive that has not settled by then is stopped and
-    raises ``TimeoutError`` rather than returning a truncated prefix.
-
-    Progress is read from ``q.recentProgress`` (retains ~100 events)
-    keyed by batchId, so EVERY batch's numInputRows is observed exactly
-    — sampling ``lastProgress`` on a 50 ms poll could skip events for
-    batches faster than the poll, making the consecutive-zero count
-    approximate (under availableNow that could only delay termination,
-    never fabricate it, but exact observation positively verifies the
-    source drained)."""
-    import time as _time
-
-    if hasattr(out, "output_mode") and hasattr(out, "df"):
-        output_mode = out.output_mode
-        out = out.df
-    spark = out.sparkSession
+    """Drive a ProcessingTimeTimeout (wall-clock punctuator) plan to a
+    memory sink and stop it once it has settled (see ``_await_settled``);
+    returns the result table. Termination is event-driven (~the cost of
+    the real batches), and ``deadline_s`` is only the safety backstop."""
+    out, output_mode = _unsuppress(out, output_mode)
     name = name or f"mem_{uuid.uuid4().hex[:8]}"
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
-    deadline = _time.monotonic() + deadline_s
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    seen: set[int] = set()
-    idle = 0
-    while q.isActive:
-        if _time.monotonic() >= deadline:
-            q.stop()
-            raise TimeoutError(
-                f"streaming query {name} did not settle within "
-                f"{deadline_s}s; it was stopped"
-            )
-        for p in q.recentProgress:
-            bid = p.get("batchId")
-            if bid is None or bid in seen:
-                continue
-            seen.add(bid)
-            if int(p.get("numInputRows", 0) or 0) == 0:
-                idle += 1
-            else:
-                idle = 0
-        if idle >= settle_batches:
-            break
-        _time.sleep(0.05)
-    if q.isActive:
-        q.stop()
-    q.awaitTermination(30)
-    return spark.table(name)
+    q = _start_available_now(out, "memory", output_mode, checkpoint, name)
+    _await_settled(q, settle_batches, deadline_s)
+    return out.sparkSession.table(name)
 
 
 def run_foreach_batch(
@@ -167,15 +166,7 @@ def run_foreach_batch(
     arbitrary-sink path (stream-table join timing per SURVEY §2f).
     Raises ``TimeoutError`` (after stopping the query) if the drive
     outlives ``timeout_s``."""
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
-    q = (
-        out.writeStream.foreachBatch(fn)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_stop(q, timeout_s)
+    _await_or_stop(_start_available_now(out, fn, output_mode, checkpoint), timeout_s)
 
 
 def clean_up(checkpoint_dir: str) -> None:
@@ -206,55 +197,50 @@ class CollectingListener(StreamingQueryListener):
         self.terminated.append(str(event.id))
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``: the helpers below list, test
+    and create files through it, so a ``file://`` or ``s3a://`` URI works
+    like a plain local path."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()), p
+
+
 def materialize_ktable(
     stream: DataFrame,
     snapshot_dir: str,
-    key_col: str = "key",
-    order_col: str = "offset",
     checkpoint: str | None = None,
     timeout_s: float = 120,
 ) -> DataFrame:
     """Streaming KTable materialization: maintain a latest-per-key parquet
     snapshot via foreachBatch merge (SURVEY §1 design (b)).
 
-    Each micro-batch: new-batch latest ∪ previous snapshot → recompute
-    latest-per-key → write a NEW versioned snapshot dir (atomic swap via
-    directory rename impossible on object stores; versioned dirs + latest
-    pointer is the portable pattern). Returns the final snapshot DataFrame.
+    Each micro-batch: the batch ∪ the previous snapshot, resolved by
+    ``KTable.from_stream`` (latest per key by ``offset``, else
+    ``timestamp``; a key whose latest value is NULL is deleted) → write a
+    NEW versioned snapshot dir ``v{batch_id}`` (atomic swap via directory
+    rename is impossible on object stores; versioned dirs are the portable
+    pattern). A rerun on the same checkpoint resumes from the newest
+    version. Returns the final snapshot DataFrame.
     """
-    import os
-
-    from pyspark.sql import functions as F
+    from kafka_streams_demo_spark.operators.kstream import KStream
+    from kafka_streams_demo_spark.operators.ktable import KTable
 
     spark = stream.sparkSession
-    payload_cols = None
+    fs, pattern = _hadoop_fs(spark, f"{snapshot_dir}/v*")
+    versions = [int(st.getPath().getName()[1:]) for st in fs.globStatus(pattern) or []]
+    latest = f"{snapshot_dir}/v{max(versions)}" if versions else None
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        nonlocal payload_cols
-        payload_cols = [c for c in batch.columns if c != key_col]
-        versions = sorted(
-            (d for d in os.listdir(snapshot_dir) if d.startswith("v")),
-            key=lambda d: int(d[1:]),
-        ) if os.path.isdir(snapshot_dir) else []
-        if versions:
-            prev = spark.read.parquet(os.path.join(snapshot_dir, versions[-1]))
-            union = batch.unionByName(prev)
-        else:
-            union = batch
-        latest = (
-            union.groupBy(key_col)
-            .agg(F.max_by(F.struct(*payload_cols), F.col(order_col)).alias("_l"))
-            .select(key_col, *[F.col(f"_l.{c}").alias(c) for c in payload_cols])
-        )
-        latest.write.mode("overwrite").parquet(os.path.join(snapshot_dir, f"v{batch_id}"))
+        nonlocal latest
+        rows = KStream(batch).df
+        if latest is not None:
+            rows = rows.unionByName(spark.read.parquet(latest))
+        path = f"{snapshot_dir}/v{batch_id}"
+        KTable.from_stream(KStream(rows)).to_df().write.mode("overwrite").parquet(path)
+        latest = path
 
     run_foreach_batch(stream, merge, output_mode="append", checkpoint=checkpoint, timeout_s=timeout_s)
-    import os as _os
-
-    versions = sorted(
-        (d for d in _os.listdir(snapshot_dir) if d.startswith("v")), key=lambda d: int(d[1:])
-    )
-    return spark.read.parquet(_os.path.join(snapshot_dir, versions[-1]))
+    return spark.read.parquet(latest)
 
 
 def idempotent_parquet_sink(base_dir: str) -> Callable[[DataFrame, int], None]:
@@ -268,28 +254,20 @@ def idempotent_parquet_sink(base_dir: str) -> Callable[[DataFrame, int], None]:
     per-batch-id idempotent writes + atomic _COMMITTED marker); readers
     take only marked directories.
     """
-    import os
 
     def write(batch: DataFrame, batch_id: int) -> None:
-        dest = os.path.join(base_dir, f"batch_id={batch_id}")
-        marker = os.path.join(dest, "_COMMITTED")
-        if os.path.exists(marker):
+        dest = f"{base_dir}/batch_id={batch_id}"
+        fs, marker = _hadoop_fs(batch.sparkSession, f"{dest}/_COMMITTED")
+        if fs.exists(marker):
             return
         batch.write.mode("overwrite").parquet(dest)
-        with open(marker, "w") as fh:
-            fh.write("")
+        fs.create(marker, True).close()
 
     return write
 
 
 def read_committed(spark: SparkSession, base_dir: str) -> DataFrame:
     """Read only the batches the idempotent sink marked committed."""
-    import os
-
-    dirs = [
-        os.path.join(base_dir, d)
-        for d in sorted(os.listdir(base_dir))
-        if d.startswith("batch_id=")
-        and os.path.exists(os.path.join(base_dir, d, "_COMMITTED"))
-    ]
+    fs, markers = _hadoop_fs(spark, f"{base_dir}/batch_id=*/_COMMITTED")
+    dirs = sorted(str(st.getPath().getParent()) for st in fs.globStatus(markers) or [])
     return spark.read.parquet(*dirs)

@@ -46,19 +46,31 @@ def process_with_state(
     )
 
 
-def running_count_processor(
-    stream: DataFrame, group_cols: list[str] = ("key",)
+def _running_count(
+    stream: DataFrame,
+    group_cols,
+    timeout: str = "NoTimeout",
+    punctuate_interval_ms: int = 0,
 ) -> DataFrame:
-    """WordCountProcessor parity (WordCountProcessorExample.scala:23-61):
-    per-key running count held in a state store, updated counts forwarded
-    downstream each commit. Input: already-tokenized keyed records."""
+    """The one running-count body behind the three processors below: a
+    per-key count in the state store, forwarded on every update. On a
+    timer fire (``timeout`` "EventTimeTimeout" or "ProcessingTimeTimeout")
+    the key re-forwards its count without new input; either way the timer
+    is re-armed ``punctuate_interval_ms`` past the watermark or wall clock."""
 
     def count_fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        import pandas as _pd
+
         n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"key": [key[0]], "value": [n]})
+        if not state.hasTimedOut:
+            for pdf in pdfs:
+                n += len(pdf)
+            state.update((n,))
+        if timeout == "EventTimeTimeout":
+            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + punctuate_interval_ms)
+        elif timeout == "ProcessingTimeTimeout":
+            state.setTimeoutDuration(punctuate_interval_ms)
+        yield _pd.DataFrame({"key": [key[0]], "value": [n]})
 
     return process_with_state(
         stream,
@@ -66,7 +78,17 @@ def running_count_processor(
         count_fn,
         output_schema="key string, value long",
         state_schema="n long",
+        timeout=timeout,
     )
+
+
+def running_count_processor(
+    stream: DataFrame, group_cols: list[str] = ("key",)
+) -> DataFrame:
+    """WordCountProcessor parity (WordCountProcessorExample.scala:23-61):
+    per-key running count held in a state store, updated counts forwarded
+    downstream each commit. Input: already-tokenized keyed records."""
+    return _running_count(stream, group_cols)
 
 
 def punctuated_count_processor(
@@ -82,36 +104,10 @@ def punctuated_count_processor(
     Per-key ``GroupStateTimeout.EventTimeTimeout`` timers replace the
     reference's cross-key store scan (SURVEY §7 'punctuator parity': same
     output set, idiomatic per-key shape). Requires ``withWatermark`` on the
-    input — timers fire when the watermark passes them.
+    input — timers fire when the watermark passes them, and each fire
+    re-arms relative to the advancing watermark (STREAM_TIME semantics).
     """
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        n = state.get[0] if state.exists else 0
-        if state.hasTimedOut:
-            # punctuator fire: forward current count, re-arm relative to
-            # the advancing watermark (STREAM_TIME semantics)
-            state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + punctuate_interval_ms
-            )
-            yield _pd.DataFrame({"key": [key[0]], "value": [n]})
-            return
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + punctuate_interval_ms)
-        yield _pd.DataFrame({"key": [key[0]], "value": [n]})
-
-    return process_with_state(
-        stream,
-        list(group_cols),
-        fn,
-        output_schema="key string, value long",
-        state_schema="n long",
-        output_mode="update",
-        timeout="EventTimeTimeout",
-    )
+    return _running_count(stream, group_cols, "EventTimeTimeout", punctuate_interval_ms)
 
 
 def wallclock_punctuated_processor(
@@ -127,30 +123,7 @@ def wallclock_punctuated_processor(
     running count ``punctuate_interval_ms`` of wall time after its last
     activity. No watermark required — wall-clock punctuation is
     independent of event time, same as the reference API."""
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        n = state.get[0] if state.exists else 0
-        if state.hasTimedOut:
-            state.setTimeoutDuration(punctuate_interval_ms)
-            yield _pd.DataFrame({"key": [key[0]], "value": [n]})
-            return
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        state.setTimeoutDuration(punctuate_interval_ms)
-        yield _pd.DataFrame({"key": [key[0]], "value": [n]})
-
-    return process_with_state(
-        stream,
-        list(group_cols),
-        fn,
-        output_schema="key string, value long",
-        state_schema="n long",
-        output_mode="update",
-        timeout="ProcessingTimeTimeout",
-    )
+    return _running_count(stream, group_cols, "ProcessingTimeTimeout", punctuate_interval_ms)
 
 
 def _make_tws_running_count():

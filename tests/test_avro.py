@@ -272,8 +272,8 @@ def test_nullable_long_beyond_2_53_refused_not_corrupted():
 
 def test_snappy_decompress_golden_streams():
     """Hand-built streams per the public snappy format description —
-    exercises all copy element types the literal-only compressor never
-    emits, so real-world snappy OCF blocks decode correctly."""
+    exercises the copy element types, so real-world snappy OCF blocks
+    decode correctly."""
     from kafka_streams_demo_spark.sources.avro import _snappy_decompress
 
     # literal "abcd" + copy-1 (len 4, offset 4) → "abcdabcd"
@@ -286,8 +286,13 @@ def test_snappy_decompress_golden_streams():
     with pytest.raises(ValueError, match="snappy"):
         _snappy_decompress(b"\x09\x0cabcd\x01\x04")
     # corrupt: copy offset beyond produced output
-    with pytest.raises(ValueError, match="offset"):
+    with pytest.raises(ValueError, match="snappy"):
         _snappy_decompress(b"\x08\x00a\x15\x09")
+    # corrupt: length header truncated, or larger than the input can produce
+    with pytest.raises(ValueError, match="snappy"):
+        _snappy_decompress(b"\xff\xff")
+    with pytest.raises(ValueError, match="snappy"):
+        _snappy_decompress(b"\xff\xff\xff\x7f\x00")
 
 
 def test_snappy_compress_roundtrip_various_sizes():
@@ -298,6 +303,21 @@ def test_snappy_compress_roundtrip_various_sizes():
 
     for payload in (b"", b"x", b"hello world" * 10, bytes(range(256)) * 300):
         assert _snappy_decompress(_snappy_compress(payload)) == payload
+
+
+def test_ocf_snappy_compresses_repetitive_blocks():
+    """A repetitive ~10 KB block must come out smaller under snappy than
+    under the null codec: the compressor emits copy elements, not only
+    literals."""
+    from kafka_streams_demo_spark.sources.avro import ocf_decode, ocf_encode
+
+    rows = [{"user_id": i % 4, "event_type": "click", "value": 1.0, "note": "same"}
+            for i in range(500)]
+    plain = ocf_encode(SCHEMA, rows, codec="null")
+    packed = ocf_encode(SCHEMA, rows, codec="snappy")
+    assert len(plain) > 10_000
+    assert len(packed) < len(plain)
+    assert ocf_decode(packed)[1] == rows
 
 
 def test_ocf_snappy_codec_roundtrip_and_crc():

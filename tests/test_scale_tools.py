@@ -155,18 +155,15 @@ def test_salted_join_matches_plain_join_under_skew(spark):
 def test_zorder_write_tightens_both_dims(spark, tmp_path):
     """Z-order vs single-column range clustering on events(ts, value):
     clustering on ts alone leaves value's per-row-group span wide (~75%
-    of global measured); the Morton interleave must bring the mean span
-    of BOTH dims under 50% (measured: ts 39%, value 30% — each dim
-    trades locality for the other's skipping), and data must round-trip
-    exactly."""
+    of global measured); writing ``zorder_layout``'s arrangement (16
+    files = the 4×4 grid of top interleaved bits) must bring the mean
+    span of BOTH dims under 50%, and data must round-trip exactly."""
     import glob
 
     import pyarrow.parquet as pq
 
-    from kafka_streams_demo_spark.sources.layout import (
-        write_range_clustered,
-        write_zorder_clustered,
-    )
+    from kafka_streams_demo_spark.functions.layout import zorder_layout
+    from kafka_streams_demo_spark.sources.layout import write_range_clustered
     from kafka_streams_demo_spark.sources.registry import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.01").select(
@@ -177,9 +174,10 @@ def test_zorder_write_tightens_both_dims(spark, tmp_path):
     ).first()
     ts_only, zord = str(tmp_path / "ts_only"), str(tmp_path / "zord")
     write_range_clustered(ev, ts_only, "ts_us", files=8)
-    write_zorder_clustered(
-        ev, zord, [("ts_us", lo_ts, hi_ts), ("value", lo_v, hi_v)], files=8
-    )
+    cents = F.round(F.col("value") * 100).cast("long")
+    zorder_layout(ev, [F.col("ts_us"), cents], num_files=16).drop(
+        "zval", "file_id"
+    ).write.parquet(zord)
 
     def mean_span(path, col):
         spans = []

@@ -16,8 +16,11 @@ from kafka_streams_demo_spark.sources import fixtures
 from kafka_streams_demo_spark.streaming.lifecycle import (
     CollectingListener,
     clean_up,
+    idempotent_parquet_sink,
     materialize_ktable,
+    read_committed,
     run_available_now,
+    run_foreach_batch,
     run_punctuated_until_settled,
 )
 from kafka_streams_demo_spark.streaming.processor import running_count_processor
@@ -94,7 +97,9 @@ def test_streaming_processor_with_state(spark, tmp_path):
 
 def test_materialize_ktable_snapshot(spark, tmp_path):
     """Streaming KTable materialization via foreachBatch merge: the
-    user_regions changelog resolves alice asia→europe in the snapshot."""
+    user_regions changelog resolves alice asia→europe in the snapshot.
+    A NULL value deletes its key like the batch ``KTable`` does, and a
+    later batch re-inserts it: x then NULL in batch 0, y in batch 1."""
     src = _as_stream(spark, fixtures.user_regions(spark), tmp_path, "regions")
     snap_dir = str(tmp_path / "snap")
     os.makedirs(snap_dir, exist_ok=True)
@@ -103,14 +108,31 @@ def test_materialize_ktable_snapshot(spark, tmp_path):
     assert got["alice"] == "europe"
     assert len(got) == 6
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    log_dir = tmp_path / "changelog"
+    log_dir.mkdir()
+    for i, rows in enumerate([[("a", "x", 0), ("a", None, 1)], [("a", "y", 2)]]):
+        k, v, o = zip(*rows)
+        f = log_dir / f"b{i}.parquet"
+        pq.write_table(pa.table({"key": k, "value": pa.array(v, pa.string()), "offset": o}), f)
+        os.utime(f, (1_000_000 + i, 1_000_000 + i))  # file source orders by mtime
+    changelog = (
+        spark.readStream.schema("key string, value string, offset long")
+        .option("maxFilesPerTrigger", 1).parquet(str(log_dir))
+    )
+    log_snap = str(tmp_path / "log_snap")
+    final = materialize_ktable(changelog, log_snap)
+    assert spark.read.parquet(f"{log_snap}/v0").count() == 0
+    assert [tuple(r) for r in final.select("key", "value").collect()] == [("a", "y")]
+
 
 @pytest.mark.parametrize("drive", ["available_now", "foreach_batch", "punctuated"])
 def test_drive_past_timeout_stops_query_and_raises(spark, tmp_path, drive):
     """A drive that outlives its timeout (or deadline) must stop its
     query and raise TimeoutError naming the query and the timeout —
     never hand back a truncated result with the query still running."""
-    from kafka_streams_demo_spark.streaming.lifecycle import run_foreach_batch
-
     src = _as_stream(spark, fixtures.kv_string_stream(spark), tmp_path, "kv")
     before = {q.id for q in spark.streams.active}
     with pytest.raises(TimeoutError, match=r"streaming query \S+ did not .* 0\.001s"):
@@ -310,8 +332,6 @@ def test_streaming_table_table_join_via_foreachbatch_snapshots(spark, tmp_path):
     join — including an update overriding an earlier value."""
     import pyspark.sql.functions as F2
 
-    from kafka_streams_demo_spark.streaming.lifecycle import materialize_ktable
-
     left_rows = [("a", 1, 0), ("b", 2, 1), ("a", 10, 2)]   # a updates 1 -> 10
     right_rows = [("a", 100, 0), ("c", 300, 1), ("a", 111, 2)]  # a: 100 -> 111
     ldir, rdir = tmp_path / "left", tmp_path / "right"
@@ -406,8 +426,6 @@ def test_streaming_stream_table_join_golden_clicks(spark, tmp_path):
     import pyspark.sql.functions as F2
 
     from kafka_streams_demo_spark.sources import fixtures
-    from kafka_streams_demo_spark.streaming.lifecycle import materialize_ktable
-
     rdir, cdir = tmp_path / "regions", tmp_path / "clicks"
     fixtures.user_regions(spark).write.parquet(str(rdir / "data"))
     fixtures.user_clicks(spark).write.parquet(str(cdir / "data"))
@@ -431,15 +449,10 @@ def test_streaming_stream_table_join_golden_clicks(spark, tmp_path):
         for r in joined.collect():
             totals[r["region"]] = totals.get(r["region"], 0) + r["clicks"]
 
-    q = (
-        spark.readStream.schema(clicks_schema)
-        .parquet(str(cdir / "data"))
-        .writeStream.foreachBatch(enrich_and_sum)
-        .option("checkpointLocation", str(cdir / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        spark.readStream.schema(clicks_schema).parquet(str(cdir / "data")),
+        enrich_and_sum, output_mode="append", checkpoint=str(cdir / "ckpt"),
     )
-    q.awaitTermination(120)
     assert totals == {"americas": 101, "europe": 109, "asia": 124}
 
 
@@ -448,12 +461,6 @@ def test_idempotent_sink_survives_batch_retry(spark, tmp_path):
     be a no-op (retry after failure-before-checkpoint-commit), a fresh
     batch id lands once, and read_committed sees exactly one copy of
     every row."""
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-        run_foreach_batch,
-    )
-
     in_dir, sink = str(tmp_path / "in"), str(tmp_path / "sink")
     df = spark.createDataFrame([("a", 1), ("b", 2)], "key string, value long")
     df.coalesce(1).write.mode("append").parquet(in_dir)
@@ -472,6 +479,20 @@ def test_idempotent_sink_survives_batch_retry(spark, tmp_path):
     write(spark.createDataFrame([("c", 3)], "key string, value long"), 1)
     got = sorted((r["key"], r["value"]) for r in read_committed(spark, sink).collect())
     assert got == [("a", 1), ("b", 2), ("c", 3)]
+
+
+def test_idempotent_sink_on_file_uri(spark, tmp_path):
+    """The sink, its _COMMITTED markers and read_committed go through
+    Hadoop's FileSystem, so a ``file://`` base works like a local path."""
+    in_dir, sink = str(tmp_path / "in"), (tmp_path / "sink").as_uri()
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "key string, value long")
+    df.coalesce(1).write.parquet(in_dir)
+    stream = spark.readStream.schema(df.schema).parquet(in_dir)
+    run_foreach_batch(stream, idempotent_parquet_sink(sink), output_mode="append",
+                      checkpoint=str(tmp_path / "ckpt"))
+    assert (tmp_path / "sink" / "batch_id=0" / "_COMMITTED").exists()
+    got = sorted((r["key"], r["value"]) for r in read_committed(spark, sink).collect())
+    assert got == [("a", 1), ("b", 2)]
 
 
 def test_wallclock_punctuated_processor(spark, tmp_path):
@@ -566,8 +587,6 @@ def test_drop_duplicates_within_watermark_collapses_redelivery(spark, tmp_path):
     one output row through the state-store-backed streaming dedup."""
     import datetime as dt
 
-    from kafka_streams_demo_spark.streaming.lifecycle import run_available_now
-
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     rows = [(i, f"u{i % 3}", t0 + dt.timedelta(seconds=i)) for i in range(30)]
     src = tmp_path / "dup"
@@ -644,7 +663,6 @@ def test_transform_with_state_matches_apply_in_pandas_with_state(spark, tmp_path
         )
     import datetime as dt
 
-    from kafka_streams_demo_spark.streaming.lifecycle import run_available_now
     from kafka_streams_demo_spark.streaming.processor import (
         running_count_processor,
         running_count_processor_tws,
@@ -842,11 +860,6 @@ def test_incremental_ingest_stream_index_grows_once_per_batch(spark, tmp_path):
     import os
 
     from kafka_streams_demo_spark.functions.dedup import exact_dedup_incremental
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     index_dir = str(tmp_path / "index")
@@ -864,14 +877,10 @@ def test_incremental_ingest_stream_index_grows_once_per_batch(spark, tmp_path):
         sink(keep, batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = spark.createDataFrame(
         [(1, "alpha body"), (2, "beta body"), (3, "alpha body")], schema
@@ -921,11 +930,6 @@ def test_ingest_keeplist_stream_full_pipeline(spark, tmp_path):
         ingest_keeplist,
         minhash_index,
     )
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     dirs = {n: str(tmp_path / n) for n in ("hashes", "mhidx", "corpus")}
@@ -956,14 +960,10 @@ def test_ingest_keeplist_stream_full_pipeline(spark, tmp_path):
         sinks["corpus"](kept_docs, batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=180,
         )
-        q.awaitTermination(180)
 
     body = lambda tag: " ".join(f"{tag}{i}" for i in range(10))  # noqa: E731
     b1 = spark.createDataFrame(
@@ -1013,11 +1013,6 @@ def test_clean_then_ingest_stream_pipeline(spark, tmp_path):
         minhash_index,
     )
     from kafka_streams_demo_spark.functions.text import c4_line_clean, gopher_quality
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     dirs = {n: str(tmp_path / n) for n in ("hashes", "mhidx", "corpus")}
@@ -1064,14 +1059,10 @@ def test_clean_then_ingest_stream_pipeline(spark, tmp_path):
         sinks["corpus"](kept_docs, batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=180,
         )
-        q.awaitTermination(180)
 
     line = lambda tag: " ".join(f"{tag}{i}" for i in range(10)) + "."  # noqa: E731
     b1 = spark.createDataFrame(
@@ -1129,11 +1120,6 @@ def test_ivf_delta_ingest_stream_index_grows_once(spark, tmp_path):
         ivf_centroids,
     )
     from kafka_streams_demo_spark.sources.registry import load_table
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     cents = ivf_centroids(emb).persist()
     in_dir = str(tmp_path / "in")
@@ -1146,15 +1132,11 @@ def test_ivf_delta_ingest_stream_index_grows_once(spark, tmp_path):
         sink(ivf_assign_delta(batch, cents).select("n_id", "cell"), batch_id)
 
     def run():
-        q = (
+        run_foreach_batch(
             spark.readStream.schema("vec_id long, embedding array<float>")
-            .parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = emb.filter(F.col("vec_id") < 30).select("vec_id", "embedding")
     b1.coalesce(1).write.mode("append").parquet(in_dir)
@@ -1189,11 +1171,6 @@ def test_lm_counts_stream_maintenance_exactly_once(spark, tmp_path):
     import os
 
     from kafka_streams_demo_spark.functions.lm import lm_counts, merge_lm_counts
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     cb_dir = str(tmp_path / "cb")
@@ -1210,14 +1187,10 @@ def test_lm_counts_stream_maintenance_exactly_once(spark, tmp_path):
         cu_sink(cu, batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = spark.createDataFrame([(1, "a b a b"), (2, "b c")], schema)
     b1.coalesce(1).write.mode("append").parquet(in_dir)
@@ -1260,11 +1233,6 @@ def test_hll_registers_stream_maintenance_exactly_once(spark, tmp_path):
     import os
 
     from kafka_streams_demo_spark.functions.sketches import hll_merge, hll_registers
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "regs")
@@ -1276,14 +1244,10 @@ def test_hll_registers_stream_maintenance_exactly_once(spark, tmp_path):
         sink(hll_registers(batch, "user_id", p=7), batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = spark.createDataFrame([(i,) for i in range(60)], schema)
     b1.coalesce(1).write.mode("append").parquet(in_dir)
@@ -1336,14 +1300,10 @@ def test_scd2_merge_stream_versions(spark, tmp_path):
         merged.write.mode("overwrite").parquet(f"{dim_root}/v{batch_id}")
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     def day(d):
         return dt.datetime(2024, 1, d)
@@ -1378,11 +1338,6 @@ def test_kmv_sketch_stream_maintenance_exactly_once(spark, tmp_path):
     import os
 
     from kafka_streams_demo_spark.functions.sketches import kmv_merge, kmv_sketch
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "kmv")
@@ -1394,14 +1349,10 @@ def test_kmv_sketch_stream_maintenance_exactly_once(spark, tmp_path):
         sink(kmv_sketch(batch, "user_id", k=16), batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = spark.createDataFrame([(i,) for i in range(80)], schema)
     b1.coalesce(1).write.mode("append").parquet(in_dir)
@@ -1434,11 +1385,6 @@ def test_bm25_postings_stream_maintenance_exactly_once(spark, tmp_path):
         bm25_postings,
         bm25_search_queries,
     )
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "postings")
@@ -1450,14 +1396,10 @@ def test_bm25_postings_stream_maintenance_exactly_once(spark, tmp_path):
         sink(bm25_postings(batch), batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = spark.createDataFrame(
         [(1, "the quick brown fox"), (2, "lazy dog sleeps"),
@@ -1499,11 +1441,6 @@ def test_pq_codes_stream_maintenance_exactly_once(spark, tmp_path):
         pq_sample_codebooks,
     )
     from kafka_streams_demo_spark.sources import load_table
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001").limit(100)
     emb.persist()
     cbs = pq_sample_codebooks(emb)
@@ -1519,15 +1456,11 @@ def test_pq_codes_stream_maintenance_exactly_once(spark, tmp_path):
         sink(pq_encode(batch, cbs), batch_id)
 
     def run():
-        q = (
+        run_foreach_batch(
             spark.readStream.schema("vec_id long, embedding array<float>")
-            .parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = emb.filter(F.col("vec_id") < 50).select("vec_id", "embedding")
     b1.coalesce(1).write.mode("append").parquet(in_dir)
@@ -1568,11 +1501,6 @@ def test_semdedup_verdict_stream_maintenance_exactly_once(spark, tmp_path):
     )
     from kafka_streams_demo_spark.functions.similarity import ivf_centroids
     from kafka_streams_demo_spark.sources import load_table
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001").limit(150)
     emb.persist().count()
     tau = 0.3
@@ -1601,15 +1529,11 @@ def test_semdedup_verdict_stream_maintenance_exactly_once(spark, tmp_path):
         )
 
     def run():
-        q = (
+        run_foreach_batch(
             spark.readStream.schema("vec_id long, embedding array<float>")
-            .parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b2 = emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100)).select(
         "vec_id", "embedding"
@@ -1654,11 +1578,6 @@ def test_pq_residual_codes_stream_maintenance_exactly_once(spark, tmp_path):
     )
     from kafka_streams_demo_spark.functions.similarity import ivf_centroids
     from kafka_streams_demo_spark.sources import load_table
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001").limit(100)
     emb.persist().count()
     cents = ivf_centroids(emb).localCheckpoint(eager=True)
@@ -1678,15 +1597,11 @@ def test_pq_residual_codes_stream_maintenance_exactly_once(spark, tmp_path):
         sink(pq_encode(rv, cbs, vec_col="rvec", keep_cols=("cell",)), batch_id)
 
     def run():
-        q = (
+        run_foreach_batch(
             spark.readStream.schema("vec_id long, embedding array<float>")
-            .parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = emb.filter(F.col("vec_id") < 50).select("vec_id", "embedding")
     b1.coalesce(1).write.mode("append").parquet(in_dir)
@@ -1716,11 +1631,6 @@ def test_cms_sketch_stream_maintenance_exactly_once(spark, tmp_path):
     import os
 
     from kafka_streams_demo_spark.functions.sketches import cms_merge, cms_sketch
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "cms")
@@ -1732,14 +1642,10 @@ def test_cms_sketch_stream_maintenance_exactly_once(spark, tmp_path):
         sink(cms_sketch(batch, "user_id", depth=3, width=64), batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = spark.createDataFrame([(i % 37,) for i in range(200)], schema)
     b1.coalesce(1).write.mode("append").parquet(in_dir)
@@ -1772,11 +1678,6 @@ def test_substring_index_stream_maintenance_exactly_once(spark, tmp_path):
         char_gram_index,
         substring_find,
     )
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "grams")
@@ -1788,14 +1689,10 @@ def test_substring_index_stream_maintenance_exactly_once(spark, tmp_path):
         sink(char_gram_index(batch, n=4), batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = spark.createDataFrame(
         [(1, "full table scan over parquet"), (2, "table scan with pruning")],
@@ -1850,11 +1747,6 @@ def test_ngram_jaccard_incremental_stream_drive_exactly_once(spark, tmp_path):
         ngram_jaccard_pairs,
         ngram_jaccard_pairs_incremental,
     )
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     pairs_dir = str(tmp_path / "pairs")
@@ -1876,14 +1768,10 @@ def test_ngram_jaccard_incremental_stream_drive_exactly_once(spark, tmp_path):
         doc_sink(batch, batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),
@@ -1925,11 +1813,6 @@ def test_embedding_cosine_incremental_stream_drive_exactly_once(spark, tmp_path)
         embedding_cosine_pairs_incremental,
     )
     from kafka_streams_demo_spark.sources import load_table
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     pairs_dir = str(tmp_path / "pairs")
@@ -1950,14 +1833,10 @@ def test_embedding_cosine_incremental_stream_drive_exactly_once(spark, tmp_path)
         vec_sink(batch, batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = emb.filter(F.col("vec_id") < 60)
     b1.coalesce(1).write.mode("append").parquet(in_dir)
@@ -2028,14 +1907,10 @@ def test_dedup_clusters_incremental_stream_drive(spark, tmp_path):
         merged.write.mode("overwrite").parquet(f"{asg_root}/v{batch_id}")
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = spark.createDataFrame([(1,), (2,), (5,), (9,)], schema)
     b1.coalesce(1).write.mode("append").parquet(in_dir)
@@ -2090,14 +1965,10 @@ def test_compaction_apply_stream_maintenance(spark, tmp_path):
         open(os.path.join(dest, "_COMMITTED"), "w").close()
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     for b, rows in enumerate([
         [("a", 1, "x1"), ("a", 2, "x2"), ("b", 1, "y1")],
@@ -2150,11 +2021,6 @@ def test_quantile_sketch_stream_maintenance_exactly_once(spark, tmp_path):
         quantile_sketch,
         quantile_sketch_merge,
     )
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "qsk")
@@ -2166,14 +2032,10 @@ def test_quantile_sketch_stream_maintenance_exactly_once(spark, tmp_path):
         sink(quantile_sketch(batch, "value", "event_id", k=32), batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     b1 = spark.createDataFrame([(i, float(i * 7 % 100)) for i in range(60)], schema)
     b1.coalesce(1).write.mode("append").parquet(in_dir)
@@ -2209,12 +2071,6 @@ def test_session_window_suppress_stream_finals_once_and_late_expiry(spark, tmp_p
 
     from kafka_streams_demo_spark.operators.grouped import suppress
     from kafka_streams_demo_spark.operators.windows import SessionWindows
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-        run_foreach_batch,
-    )
-
     src_dir = str(tmp_path / "sess_sup_src")
     out_dir = str(tmp_path / "sess_sup_out")
     ckpt = str(tmp_path / "sess_sup_ckpt")
@@ -2300,11 +2156,6 @@ def test_nb_classifier_stream_maintenance_exactly_once(spark, tmp_path):
         nb_model_counts,
         nb_quality_scores,
     )
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        idempotent_parquet_sink,
-        read_committed,
-    )
-
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     bc_dir = str(tmp_path / "bc")
@@ -2321,14 +2172,10 @@ def test_nb_classifier_stream_maintenance_exactly_once(spark, tmp_path):
         dc_sink(dc, batch_id)
 
     def run():
-        q = (
-            spark.readStream.schema(schema).parquet(in_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir),
+            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
         )
-        q.awaitTermination(120)
 
     rows1 = [(i, "clean curated prose", 1) for i in range(10)] + [
         (i, "spam junk clicks", 0) for i in range(10, 30)
@@ -2375,9 +2222,6 @@ def test_wallclock_drive_punctuation_multiplicity(spark):
 
     from kafka_streams_demo_spark.catalog.parity import (
         _batched_events_stream_dir,
-    )
-    from kafka_streams_demo_spark.streaming.lifecycle import (
-        run_punctuated_until_settled,
     )
     from kafka_streams_demo_spark.streaming.processor import (
         wallclock_punctuated_processor,

@@ -39,6 +39,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from kafka_streams_demo_spark.session import get_spark  # noqa: E402
+from kafka_streams_demo_spark.streaming.lifecycle import (  # noqa: E402
+    _await_or_stop,
+    _await_settled,
+    _start_available_now,
+)
 from kafka_streams_demo_spark.streaming.processor import (  # noqa: E402
     process_with_state,
     wallclock_punctuated_processor,
@@ -125,44 +130,6 @@ def state_metrics(progress) -> dict:
     return keep
 
 
-def drive_until_settled(out, checkpoint: str, settle_batches: int = 2,
-                        deadline_s: int = 1800):
-    """noop-sink availableNow drive, stopped after `settle_batches`
-    consecutive zero-input batches (the run_punctuated_until_settled
-    logic without the driver-side memory sink — big-state output stays
-    off the driver). Returns the last progress dict."""
-    q = (
-        out.writeStream.format("noop")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    deadline = time.monotonic() + deadline_s
-    seen: set[int] = set()
-    idle = 0
-    last = None
-    while time.monotonic() < deadline and q.isActive:
-        for p in q.recentProgress:
-            bid = p.get("batchId")
-            if bid is None or bid in seen:
-                continue
-            seen.add(bid)
-            last = p
-            if int(p.get("numInputRows", 0) or 0) == 0:
-                idle += 1
-            else:
-                idle = 0
-        if idle >= settle_batches:
-            break
-        time.sleep(0.05)
-    last = q.lastProgress or last
-    if q.isActive:
-        q.stop()
-    q.awaitTermination(60)
-    return last
-
-
 def run_drive(spark, src_dir: str, total_rows: int, make_out, suite: str,
               provider: str, n_keys: int, settle: bool) -> dict:
     ck = tempfile.mkdtemp(prefix=f"ckpt_bigstate_{suite}_")
@@ -173,18 +140,12 @@ def run_drive(spark, src_dir: str, total_rows: int, make_out, suite: str,
     )
     out = make_out(stream)
     t0 = time.monotonic()
+    q = _start_available_now(out, "noop", "update", ck)
     if settle:
-        last = drive_until_settled(out, ck)
+        _await_settled(q, deadline_s=1800)
     else:
-        q = (
-            out.writeStream.format("noop")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        q.awaitTermination(1800)
-        last = q.lastProgress
+        _await_or_stop(q, 1800)
+    last = q.lastProgress
     wall = time.monotonic() - t0
     heap = jvm_heap_used(spark)
     rec = {

@@ -26,6 +26,10 @@ from pyspark.sql import functions as F  # noqa: E402
 from kafka_streams_demo_spark import KStream  # noqa: E402
 from kafka_streams_demo_spark.session import get_spark  # noqa: E402
 from kafka_streams_demo_spark.sources.registry import load_table, read_stream_table  # noqa: E402
+from kafka_streams_demo_spark.streaming.lifecycle import (  # noqa: E402
+    _await_or_stop,
+    _start_available_now,
+)
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -33,14 +37,10 @@ ROCKSDB_PROVIDER = (
 
 
 def run_noop(out, output_mode: str = "update") -> None:
-    q = (
-        out.writeStream.format("noop")
-        .outputMode(output_mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_bench_"))
-        .trigger(availableNow=True)
-        .start()
+    q = _start_available_now(
+        out, "noop", output_mode, tempfile.mkdtemp(prefix="ckpt_bench_")
     )
-    q.awaitTermination(600)
+    _await_or_stop(q, 600)
 
 
 def run_suite(spark, sf_dir: str) -> dict[str, dict[str, float]]:
