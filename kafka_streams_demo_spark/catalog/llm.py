@@ -1206,7 +1206,7 @@ def multimodal_frames_q(spark, sf_dir):
     from kafka_streams_demo_spark.functions.multimodal import attach_binary, frame_sample
 
     docs = load_table(spark, "documents", sf_dir)
-    return frame_sample(attach_binary(docs), every_n_bytes=128, fake=True)
+    return frame_sample(attach_binary(docs), every_n_bytes=128)
 
 
 @register(
@@ -1234,7 +1234,7 @@ def multimodal_features_q(spark, sf_dir):
     from kafka_streams_demo_spark.functions.multimodal import attach_binary, decode_features
 
     docs = load_table(spark, "documents", sf_dir)
-    feats = decode_features(attach_binary(docs), fake=True)
+    feats = decode_features(attach_binary(docs))
     return feats.select(
         "doc_id", "modality", F.round(F.element_at("features", 1), 6).alias("f0")
     )
@@ -1525,8 +1525,8 @@ def ppm_frames_meta_q(spark, sf_dir):
 def multimodal_wav_features_q(spark, sf_dir):
     """REAL audio decode path: per-doc synthetic 16-bit PCM WAV (sine,
     parameters derived from doc_id) generated distributed, then RIFF
-    parse + PCM stats through Arrow batches — no fake flag, no codec
-    library (functions/codecs.py). Emits the calibration shape: the
+    parse + PCM stats through Arrow batches — no codec library
+    (functions/codecs.py). Emits the calibration shape: the
     decoded frame count (hash-checked against the generator's closed
     form — encode→parse lossless per row) plus booleans for the PCM
     stats' closed-form bounds; the raw rms/peak stay available via

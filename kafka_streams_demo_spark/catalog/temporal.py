@@ -1440,7 +1440,7 @@ def multimodal_resize_q(spark, sf_dir):
     from kafka_streams_demo_spark.functions.multimodal import attach_binary, resize_images
 
     docs = load_table(spark, "documents", sf_dir)
-    return resize_images(attach_binary(docs), fake=True)
+    return resize_images(attach_binary(docs))
 
 
 @register(

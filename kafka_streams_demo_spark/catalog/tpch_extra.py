@@ -755,8 +755,8 @@ def avro_roundtrip_q(spark, sf_dir):
         "event_id", "user_id", "event_type", "value"
     )
     rt = from_avro_df(
-        to_avro_df(ev, schema_json, out_col="_avro", impl="python"),
-        schema_json, bin_col="_avro", impl="python",
+        to_avro_df(ev, schema_json, out_col="_avro"),
+        schema_json, bin_col="_avro",
     )
     return rt.select("event_id", "user_id", "event_type", "value")
 
@@ -791,10 +791,10 @@ def avro_wire_roundtrip_q(spark, sf_dir):
     )
     reg = InMemorySchemaRegistry()
     wired = to_avro_wire_df(
-        ev, schema_json, topic_subject("events"), reg, out_col="_wire", impl="python"
+        ev, schema_json, topic_subject("events"), reg, out_col="_wire"
     )
     rt = from_avro_wire_df(
-        wired, topic_subject("events"), reg, bin_col="_wire", impl="python"
+        wired, topic_subject("events"), reg, bin_col="_wire"
     )
     return rt.select("event_id", "user_id", "event_type", "value")
 

@@ -166,18 +166,6 @@ class WindowedKGroupedStream:
             return right.unionByName(left).distinct()
 
         bucket = interval_ms(self.windows.bucket)
-        if self.windows.full and bucket <= size:
-            # a leading frame spans size+1 ms: at bucket == size an anchor
-            # at a bucket's last ms reaches EXACTLY the first ms of the
-            # bucket after next, which head-replication (one bucket deep)
-            # never delivers — the global and bucketed window sets would
-            # diverge with a phantom undercounted window (review r5).
-            # Strict inequality restores the ≤1-boundary invariant.
-            raise ValueError(
-                f"expiry windows need bucket ({self.windows.bucket!r}) strictly "
-                f"greater than window size ({self.windows.size!r}): the leading "
-                "frame spans size+1 ms"
-            )
         own = self.df.withColumn("_bkt", F.floor(ts_ms / bucket)).withColumn(
             "_ctx", F.lit(False)
         )

@@ -99,35 +99,35 @@ class SlidingWindows:
     bucket: str | None = None
     full: bool = False
 
+    def __post_init__(self):
+        if self.bucket is None:
+            return
+        bucket, size = interval_ms(self.bucket), interval_ms(self.size)
+        if bucket < size:
+            raise ValueError(
+                f"bucket {self.bucket!r} must be >= window size {self.size!r} "
+                "(a window may span at most one bucket boundary)"
+            )
+        # a leading (expiry) frame spans size+1 ms: at bucket == size an
+        # anchor at a bucket's last ms reaches the first ms of the bucket
+        # after next, which one-deep head replication never delivers
+        if self.full and bucket <= size:
+            raise ValueError(
+                f"expiry windows need bucket {self.bucket!r} strictly greater "
+                f"than window size {self.size!r} (leading frames span size+1 ms)"
+            )
+
     @classmethod
     def with_size(cls, size: str | float) -> "SlidingWindows":
         return cls(_as_interval(size))
 
     def bucketed_by(self, bucket: str | float) -> "SlidingWindows":
-        b = _as_interval(bucket)
-        if interval_ms(b) < interval_ms(self.size):
-            raise ValueError(
-                f"bucket {b!r} must be >= window size {self.size!r} "
-                "(a window may span at most one bucket boundary)"
-            )
-        if self.full and interval_ms(b) <= interval_ms(self.size):
-            raise ValueError(
-                f"expiry windows need bucket {b!r} strictly greater than "
-                f"window size {self.size!r} (leading frames span size+1 ms)"
-            )
-        return SlidingWindows(self.size, b, self.full)
+        return SlidingWindows(self.size, _as_interval(bucket), self.full)
 
     def with_expiry_windows(self) -> "SlidingWindows":
         """Emit the FULL Kafka Streams 2.7 window set: record-anchored
         trailing windows plus every non-empty expiry-opened window
         ``[ts + 1, ts + 1 + size]``."""
-        if self.bucket is not None and interval_ms(self.bucket) <= interval_ms(
-            self.size
-        ):
-            raise ValueError(
-                f"expiry windows need bucket {self.bucket!r} strictly greater "
-                f"than window size {self.size!r} (leading frames span size+1 ms)"
-            )
         return SlidingWindows(self.size, self.bucket, True)
 
 

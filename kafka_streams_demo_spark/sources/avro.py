@@ -3,22 +3,17 @@
 Parity target: the reference declares Avro serde deps (pom.xml:46-60) and
 an empty DataTypesSerializationExample.scala:3-5 — Kafka Streams users
 pair topics with Avro serdes. Spark's native answer is the spark-avro
-module (`pyspark.sql.avro.functions.from_avro/to_avro`, JVM-side); this
-container does not ship that jar, so these helpers dispatch:
+module (`pyspark.sql.avro.functions.from_avro/to_avro`, JVM-side), whose
+jar this container does not ship, so there is one codec: a from-scratch
+implementation of the Avro BINARY ENCODING
+(https://avro.apache.org/docs/++current++/specification/ — zigzag varint
+ints/longs, little-endian IEEE float/double, length-prefixed
+bytes/strings, records as field concatenation, union-index-prefixed
+nullable fields) over Arrow-batched mapInPandas. Supported schema
+subset: records of primitives plus ["null", T] unions — the shapes the
+reference's Kafka examples use.
 
-- ``impl="jvm"``: the real spark-avro expressions (use on any cluster
-  with the package loaded — it is part of the Spark distribution).
-- ``impl="python"``: a from-scratch implementation of the Avro BINARY
-  ENCODING (https://avro.apache.org/docs/++current++/specification/ —
-  zigzag varint ints/longs, little-endian IEEE float/double,
-  length-prefixed bytes/strings, records as field concatenation,
-  union-index-prefixed nullable fields) over Arrow-batched mapInPandas.
-  Supported schema subset: records of primitives plus ["null", T]
-  unions — the shapes the reference's Kafka examples use.
-- ``impl="auto"`` (default): probe once per session for the JVM module,
-  fall back to python.
-
-The python codec is byte-compatible with Avro binary encoding for the
+The codec is byte-compatible with Avro binary encoding for the
 supported subset (golden-bytes tests pin spec examples: zigzag(1)=0x02,
 zigzag(-2)=0x03, strings length-prefixed).
 """
@@ -224,43 +219,11 @@ def _make_binary_codec():
 
 # --- DataFrame projections ----------------------------------------------
 
-def _jvm_avro_available(spark: SparkSession) -> bool:
-    """Probe once per session whether the spark-avro module is loaded."""
-    key = "_kafka_streams_demo_spark_avro_probe"
-    cached = spark.conf.get(f"spark.{key}", None)
-    if cached is not None:
-        return cached == "true"
-    try:
-        from pyspark.sql.avro.functions import to_avro as jvm_to_avro
-
-        spark.range(1).select(
-            jvm_to_avro(F.struct(F.lit(1).alias("x")))
-        ).collect()
-        ok = True
-    except Exception:
-        ok = False
-    spark.conf.set(f"spark.{key}", "true" if ok else "false")
-    return ok
-
-
-def to_avro_df(
-    df: DataFrame, schema_json: str, out_col: str = "value", impl: str = "auto"
-) -> DataFrame:
+def to_avro_df(df: DataFrame, schema_json: str, out_col: str = "value") -> DataFrame:
     """Project df's schema fields into one Avro-binary column (other
     columns pass through). Arrow-batched mapInPandas — one Python stage,
     never per-row overhead outside the batch loop."""
     fields = parse_record_schema(schema_json)
-    spark = df.sparkSession
-    if impl == "auto":
-        impl = "jvm" if _jvm_avro_available(spark) else "python"
-    if impl == "jvm":
-        from pyspark.sql.avro.functions import to_avro as jvm_to_avro
-
-        names = [f[0] for f in fields]
-        return df.withColumn(
-            out_col, jvm_to_avro(F.struct(*[F.col(n) for n in names]), schema_json)
-        )
-
     passthrough = [c for c in df.columns if c not in {f[0] for f in fields}]
     out_schema = ", ".join(
         [f"{c} {t}" for c, t in zip(passthrough, _spark_types(df, passthrough))]
@@ -297,7 +260,6 @@ def from_avro_df(
     df: DataFrame,
     schema_json: str,
     bin_col: str = "value",
-    impl: str = "auto",
     writer_schema_json: str | None = None,
 ) -> DataFrame:
     """Decode an Avro-binary column back into its record fields (other
@@ -307,8 +269,7 @@ def from_avro_df(
     newer) compatible schema, pass it here and ``schema_json`` acts as
     the READER schema — fields resolve by name per the Avro spec subset
     (writer-only fields decoded and dropped, reader-only nullable fields
-    filled with null). Python impl only — the JVM from_avro expression
-    takes a single schema."""
+    filled with null)."""
     fields = parse_record_schema(schema_json)
     writer_fields = None
     if writer_schema_json is not None:
@@ -316,22 +277,6 @@ def from_avro_df(
         check_resolution(writer_fields, fields)
         if writer_fields == fields:
             writer_fields = None  # identical schemas: plain decode
-    spark = df.sparkSession
-    if impl == "auto":
-        impl = "python" if writer_fields is not None else (
-            "jvm" if _jvm_avro_available(spark) else "python"
-        )
-    if impl == "jvm" and writer_fields is not None:
-        raise ValueError(
-            "schema resolution (writer_schema_json) requires impl='python'"
-        )
-    if impl == "jvm":
-        from pyspark.sql.avro.functions import from_avro as jvm_from_avro
-
-        tmp = df.withColumn("_rec", jvm_from_avro(F.col(bin_col), schema_json))
-        keep = [c for c in df.columns if c != bin_col]
-        return tmp.select(*keep, "_rec.*")
-
     passthrough = [c for c in df.columns if c != bin_col]
     out_schema = ", ".join(
         [f"{c} {t}" for c, t in zip(passthrough, _spark_types(df, passthrough))]
@@ -345,9 +290,8 @@ def from_avro_df(
         import pandas as pd
 
         # A NULL payload (Kafka tombstone shape) decodes to an all-None
-        # record, matching JVM from_avro's null struct → null fields when
-        # the struct is flattened with `_rec.*` — the two impls must not
-        # diverge under impl="auto". Resolution: decode per the WRITER
+        # record, as spark-avro's from_avro yields a null struct whose
+        # flattened fields are null. Resolution: decode per the WRITER
         # spec (byte positions follow the writer), project by reader
         # field name (missing → None, extra → dropped).
         none_rec = {n: None for n, _, _ in field_spec}
@@ -666,8 +610,8 @@ def _make_pandas_bridge():
                     raise ValueError(
                         f"cannot losslessly encode {v!r} as Avro {avro_type}: "
                         "nullable integer column materialized as float64, "
-                        "which cannot represent this value exactly; use "
-                        "impl='jvm' or keep the column non-nullable"
+                        "which cannot represent this value exactly; keep "
+                        "the column non-nullable"
                     )
                 v = int(v)
             elif avro_type == "boolean" and not isinstance(v, bool):

@@ -324,13 +324,12 @@ def to_avro_wire_df(
     subject: str,
     registry,
     out_col: str = "value",
-    impl: str = "auto",
 ) -> DataFrame:
     """Encode schema fields into one wire-format binary column: register
     the schema under ``subject``, Avro-encode (existing codec), prepend
     the 5-byte header JVM-side (binary ``concat`` — no extra Python)."""
     sid = registry.register(subject, schema_json)
-    enc = to_avro_df(df, schema_json, out_col=out_col, impl=impl)
+    enc = to_avro_df(df, schema_json, out_col=out_col)
     return enc.withColumn(
         out_col, F.concat(F.lit(wire_header(sid)), F.col(out_col))
     )
@@ -341,7 +340,6 @@ def from_avro_wire_df(
     subject: str,
     registry,
     bin_col: str = "value",
-    impl: str = "auto",
     dead_letter: bool = False,
     all_versions: bool = False,
 ):
@@ -360,8 +358,7 @@ def from_avro_wire_df(
     the subject's lineage conforms, each row decoding per ITS writer
     schema and resolving to the latest reader by the name-matched subset
     (writer-only fields dropped, reader-only nullable fields null-filled;
-    incompatible lineages raise up front). Python decode path (per-row
-    writer dispatch has no JVM expression equivalent).
+    incompatible lineages raise up front).
     """
     sid, reader_json = registry.latest(subject)
     is_tombstone = F.col(bin_col).isNull()
@@ -376,7 +373,7 @@ def from_avro_wire_df(
                 F.substring(F.col(bin_col), _WIRE_HEADER_LEN + 1, _REST_OF_BYTES)
             ),
         )
-        decoded = from_avro_df(ok, reader_json, bin_col=bin_col, impl=impl)
+        decoded = from_avro_df(ok, reader_json, bin_col=bin_col)
         if not dead_letter:
             return decoded
         return decoded, df.filter(~conforms)

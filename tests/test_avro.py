@@ -232,16 +232,15 @@ def test_spark_roundtrip_nullable_long_column(spark):
     df = spark.range(50).selectExpr(
         "id AS k", "CASE WHEN id % 3 = 0 THEN NULL ELSE id * 10 END AS opt"
     )
-    back = from_avro_df(to_avro_df(df, schema, impl="python"), schema, impl="python")
+    back = from_avro_df(to_avro_df(df, schema), schema)
     got = {r["k"]: r["opt"] for r in back.collect()}
     assert got == {i: (None if i % 3 == 0 else i * 10) for i in range(50)}
 
 
 def test_from_avro_null_payload_yields_null_fields(spark):
     """A NULL binary payload (Kafka tombstone shape) must decode to
-    all-None record fields in the python impl — matching JVM from_avro's
-    null struct (ADVICE r3: the impls diverged and impl='auto' picked
-    either silently)."""
+    all-None record fields, as spark-avro's from_avro yields a null
+    struct."""
     df = spark.createDataFrame(
         [("k1", encode_record(parse_record_schema(SCHEMA),
                               {"user_id": 1, "event_type": "c", "value": 2.0,
@@ -250,7 +249,7 @@ def test_from_avro_null_payload_yields_null_fields(spark):
         "key string, value binary",
     )
     got = {r["key"]: (r["user_id"], r["event_type"])
-           for r in from_avro_df(df, SCHEMA, impl="python").collect()}
+           for r in from_avro_df(df, SCHEMA).collect()}
     assert got["k1"] == (1, "c")
     assert got["k2"] == (None, None)
 
@@ -405,16 +404,16 @@ def test_schema_resolution_added_nullable_field(spark):
     from kafka_streams_demo_spark.sources.avro import from_avro_df, to_avro_df
 
     v1 = spark.range(10).selectExpr("id AS k", "concat('n', id) AS name")
-    enc1 = to_avro_df(v1, SCHEMA_V1, impl="python")
-    up = from_avro_df(enc1, SCHEMA_V2, impl="python", writer_schema_json=SCHEMA_V1)
+    enc1 = to_avro_df(v1, SCHEMA_V1)
+    up = from_avro_df(enc1, SCHEMA_V2, writer_schema_json=SCHEMA_V1)
     rows = {r["k"]: (r["name"], r["tag"]) for r in up.collect()}
     assert rows == {i: (f"n{i}", None) for i in range(10)}
 
     v2 = spark.range(10).selectExpr(
         "id AS k", "concat('n', id) AS name", "concat('t', id) AS tag"
     )
-    enc2 = to_avro_df(v2, SCHEMA_V2, impl="python")
-    down = from_avro_df(enc2, SCHEMA_V1, impl="python", writer_schema_json=SCHEMA_V2)
+    enc2 = to_avro_df(v2, SCHEMA_V2)
+    down = from_avro_df(enc2, SCHEMA_V1, writer_schema_json=SCHEMA_V2)
     assert {r["k"]: r["name"] for r in down.collect()} == {i: f"n{i}" for i in range(10)}
     assert "tag" not in down.columns
 

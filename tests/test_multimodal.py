@@ -28,16 +28,10 @@ def test_attach_binary_schema_and_meta(spark):
     assert len(row["meta"]["checksum"]) == 64  # sha256 hex
 
 
-def test_decode_features_gated_without_fake(spark):
-    mm = attach_binary(_docs(spark))
-    with pytest.raises(NotImplementedError):
-        decode_features(mm)
-
-
 def test_decode_features_fake_deterministic(spark):
     mm = attach_binary(_docs(spark))
-    a = decode_features(mm, fake=True).orderBy("doc_id").collect()
-    b = decode_features(mm, fake=True).orderBy("doc_id").collect()
+    a = decode_features(mm).orderBy("doc_id").collect()
+    b = decode_features(mm).orderBy("doc_id").collect()
     assert [r["features"] for r in a] == [r["features"] for r in b]
     for r in a:
         assert len(r["features"]) == FEATURE_DIM
@@ -46,9 +40,7 @@ def test_decode_features_fake_deterministic(spark):
 
 def test_frame_sample_fake(spark):
     mm = attach_binary(_docs(spark))
-    with pytest.raises(NotImplementedError):
-        frame_sample(mm)
-    frames = frame_sample(mm, every_n_bytes=8, fake=True).collect()
+    frames = frame_sample(mm, every_n_bytes=8).collect()
     by_doc = {}
     for r in frames:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -63,7 +55,7 @@ def test_resize_stub_one_row_per_image_deterministic(spark):
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
     mm = attach_binary(docs)
-    out = resize_images(mm, target_w=224, target_h=224, fake=True)
+    out = resize_images(mm, target_w=224, target_h=224)
     rows = out.collect()
     assert len(rows) == docs.count()
     r0 = rows[0]
@@ -73,18 +65,6 @@ def test_resize_stub_one_row_per_image_deterministic(spark):
     again = {r["doc_id"]: (r["orig_w"], r["orig_h"], r["scale"]) for r in out.collect()}
     first = {r["doc_id"]: (r["orig_w"], r["orig_h"], r["scale"]) for r in rows}
     assert again == first
-
-
-def test_resize_without_fake_raises(spark):
-    from kafka_streams_demo_spark.functions.multimodal import attach_binary, resize_images
-    from kafka_streams_demo_spark.sources.registry import load_table
-
-    docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-    try:
-        resize_images(attach_binary(docs))
-        raise AssertionError("expected NotImplementedError")
-    except NotImplementedError:
-        pass
 
 
 def test_wav_codec_roundtrip_closed_form():
@@ -792,3 +772,44 @@ def test_jpeg_422_440_encode_all_paths(spark):
     assert jpeg_encode(g, subsampling="422") == jpeg_encode(g)
     with pytest.raises(ValueError, match="subsampling"):
         jpeg_encode(smooth, subsampling="411")
+
+
+# sha256 of the sorted, concatenated payload checksums for doc_id 0-39:
+# pins every fixture's payload bytes (the catalog oracles read only
+# header fields).
+PAYLOAD_DIGESTS = {
+    "attach_synthetic_gif":
+        "0e6d80b68260c51ccb349fae08bf2dd9c84c91cbf74ca6268967678bc2495e78",
+    "attach_synthetic_gif_video":
+        "b64005109466edfb0722b59969272a1c1a4c8dd3c6ac9e1c4d1c4e62e7dc77d2",
+    "attach_synthetic_jpeg":
+        "d8fd0eca138fe28de98570b9b8a64557ba597f217e1c5433d9fe7dd27457ce11",
+    "attach_synthetic_jpeg_all_layouts":
+        "a6c6801f6e4ed6be3b0ce77c67187aecdc2a8477351d3529bccede880aece7d5",
+    "attach_synthetic_jpeg_mixed":
+        "155f1763711c9d29eada2256788bbe28ec1a801e76844ccd3de5c8b23e81fadf",
+    "attach_synthetic_jpeg_progressive_mix":
+        "407c9d57a6c6642ccfff2566c65252fcfc023c39b35794333c38d36f05690eb3",
+    "attach_synthetic_jpeg_restart":
+        "ef035268fcd5d104c524e715de7c87814f1927a864d37409c81d7960b587f7f2",
+    "attach_synthetic_ppm":
+        "30c6804115207184e61c2b3067129b43e94b837ee520d5b0570121033af6ed53",
+    "attach_synthetic_ppm_video":
+        "e9bb02e02edf2cb603631801fb80043369399c378e91037cec5625ffe3ecbcb4",
+    "attach_synthetic_wav":
+        "8c79912c3e864b986d572f28b78dd2f04cb520449346ffe1b89dbfeb296766d3",
+}
+
+
+@pytest.mark.parametrize("fixture", sorted(PAYLOAD_DIGESTS))
+def test_fixture_payload_bytes_pinned(spark, fixture):
+    import hashlib
+
+    from kafka_streams_demo_spark.functions import multimodal
+
+    ids = spark.range(40).withColumnRenamed("id", "doc_id")
+    rows = getattr(multimodal, fixture)(ids).select("payload", "checksum").collect()
+    assert all(hashlib.sha256(bytes(r["payload"])).hexdigest() == r["checksum"]
+               for r in rows)
+    sums = "".join(sorted(r["checksum"] for r in rows))
+    assert hashlib.sha256(sums.encode()).hexdigest() == PAYLOAD_DIGESTS[fixture]

@@ -184,12 +184,12 @@ def test_spark_wire_roundtrip_and_header_is_jvm_side(spark):
     df = spark.range(200).selectExpr(
         "concat('u', id % 7) AS user", "id AS n", "id AS event_id"
     )
-    wired = to_avro_wire_df(df, SCHEMA, topic_subject("clicks"), reg, impl="python")
+    wired = to_avro_wire_df(df, SCHEMA, topic_subject("clicks"), reg)
     # every payload leads with the registered header
     sid = reg.latest("clicks-value")[0]
     heads = {bytes(r["value"])[:5] for r in wired.select("value").limit(20).collect()}
     assert heads == {wire_header(sid)}
-    back = from_avro_wire_df(wired, "clicks-value", reg, impl="python")
+    back = from_avro_wire_df(wired, "clicks-value", reg)
     got = {r["event_id"]: (r["user"], r["n"]) for r in back.collect()}
     assert got == {i: (f"u{i % 7}", i) for i in range(200)}
 
@@ -209,7 +209,7 @@ def test_spark_wire_dead_letter_split_and_tombstones(spark):
         "k long, value binary",
     )
     decoded, rejects = from_avro_wire_df(
-        df, "clicks-value", reg, impl="python", dead_letter=True
+        df, "clicks-value", reg, dead_letter=True
     )
     ok = {r["k"]: (r["user"], r["n"]) for r in decoded.collect()}
     assert ok == {1: ("a", 1), 4: (None, None)}  # tombstone -> null fields
@@ -224,12 +224,12 @@ def test_wire_serde_works_in_structured_streaming(spark, tmp_path):
 
     reg = InMemorySchemaRegistry()
     src = spark.range(60).selectExpr("concat('u', id % 4) AS user", "id AS n")
-    wired = to_avro_wire_df(src, SCHEMA, "clicks-value", reg, impl="python")
+    wired = to_avro_wire_df(src, SCHEMA, "clicks-value", reg)
     p = tmp_path / "wire"
     wired.select("value").write.parquet(str(p))
 
     stream = spark.readStream.schema("value binary").parquet(str(p))
-    decoded = from_avro_wire_df(stream, "clicks-value", reg, impl="python")
+    decoded = from_avro_wire_df(stream, "clicks-value", reg)
     agg = decoded.groupBy("user").agg(F.sum("n").alias("total"))
     got = {r["user"]: r["total"] for r in
            run_available_now(agg, output_mode="update").collect()}

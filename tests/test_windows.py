@@ -268,3 +268,18 @@ def test_sliding_full_rejects_bucket_equal_to_size(spark):
                 ).collect()}
 
     assert run(base) == run(base.bucketed_by("11 seconds"))
+
+
+def test_sliding_windows_direct_construction_validates():
+    """The bucket checks live in the descriptor itself: a directly
+    constructed SlidingWindows with bucket < size would silently drop rows
+    from windows spanning two bucket boundaries, so it must not build."""
+    import pytest as _pytest
+
+    from kafka_streams_demo_spark.operators.windows import SlidingWindows
+
+    with _pytest.raises(ValueError, match="must be >= window size"):
+        SlidingWindows("30 seconds", "10 seconds")
+    with _pytest.raises(ValueError, match="strictly greater"):
+        SlidingWindows("10 seconds", "10 seconds", full=True)
+    assert SlidingWindows("10 seconds", "10 seconds").bucket == "10 seconds"

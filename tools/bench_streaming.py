@@ -112,7 +112,7 @@ def run_suite(spark, sf_dir: str) -> dict[str, dict[str, float]]:
         "event_id", "user_id", "event_type", "value"
     )
     rt = from_avro_df(
-        to_avro_df(ev4, schema_json, impl="python"), schema_json, impl="python"
+        to_avro_df(ev4, schema_json), schema_json
     ).groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     t0 = time.monotonic()
     run_noop(rt)
@@ -132,8 +132,8 @@ def run_suite(spark, sf_dir: str) -> dict[str, dict[str, float]]:
     ev5 = read_stream_table(spark, "events", sf_dir).select(
         "event_id", "user_id", "event_type", "value"
     )
-    wired = to_avro_wire_df(ev5, schema_json, "events-value", reg, impl="python")
-    wrt = from_avro_wire_df(wired, "events-value", reg, impl="python") \
+    wired = to_avro_wire_df(ev5, schema_json, "events-value", reg)
+    wrt = from_avro_wire_df(wired, "events-value", reg) \
         .groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     t0 = time.monotonic()
     run_noop(wrt)
