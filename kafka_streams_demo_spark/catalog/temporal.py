@@ -1794,11 +1794,14 @@ def bm25_zipf_direct_q(spark, sf_dir):
     n = load_table(spark, "documents", sf_dir).count()
     # materialize the generated corpus ONCE: the stats pass, the posting
     # build and the query build each re-ran the 60-md5-per-doc generator
-    # otherwise (three evaluations per run — r13, guide §2.4). LAZY
-    # checkpoint (r14): same single evaluation via the persisted RDD,
-    # but the generator runs inside the scoring job instead of behind
-    # its own driver barrier (VERDICT r13 task 5).
-    docs = zipf_corpus(spark, 10 * n).localCheckpoint(eager=False)
+    # otherwise (three evaluations per run — r13, guide §2.4). EAGER:
+    # lazily, the scoring plan's concurrent stages each start computing
+    # the uncached corpus; the first job to finish marks the RDD
+    # checkpointed and drops its lineage, the generator's SQL metrics
+    # are garbage-collected, and the other stage's tasks then log
+    # "ERROR DAGScheduler: Failed to update accumulator N (Unknown
+    # class)". Eager measured as fast at sf0.1 on 4 cores.
+    docs = zipf_corpus(spark, 10 * n).localCheckpoint(eager=True)
     return bm25_search_queries(docs, _zipf_queries(docs), k=5)
 
 
@@ -1820,9 +1823,9 @@ def bm25_zipf_pruned_q(spark, sf_dir):
     )
 
     n = load_table(spark, "documents", sf_dir).count()
-    # one corpus materialization — same rationale (and same r14 lazy
-    # form) as bm25_zipf_direct
-    docs = zipf_corpus(spark, 10 * n).localCheckpoint(eager=False)
+    # one eager corpus materialization — same rationale as
+    # bm25_zipf_direct
+    docs = zipf_corpus(spark, 10 * n).localCheckpoint(eager=True)
     return bm25_search_queries_pruned(docs, _zipf_queries(docs), k=5)
 
 

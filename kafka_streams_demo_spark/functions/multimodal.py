@@ -34,10 +34,6 @@ from pyspark.sql import functions as F
 
 FEATURE_DIM = 16
 
-MULTIMODAL_SCHEMA = (
-    "doc_id long, modality string, byte_len long, checksum string"
-)
-
 _ATTACH_SCHEMA = (
     "doc_id long, payload binary, modality string, byte_len long, checksum string"
 )

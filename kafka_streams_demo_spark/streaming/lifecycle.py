@@ -23,6 +23,7 @@ drained. Every drive (here and in tools/) starts through
 
 from __future__ import annotations
 
+import json
 import shutil
 import tempfile
 import time
@@ -177,7 +178,9 @@ def clean_up(checkpoint_dir: str) -> None:
 
 class CollectingListener(StreamingQueryListener):
     """StreamingQueryListener parity with the reference's state-listener
-    sketch (ConfluentKStreamsDemo.java:80-89): collects progress events."""
+    sketch (ConfluentKStreamsDemo.java:80-89): collects each progress
+    event whole, as the dict of its JSON (``batchId``, ``durationMs``,
+    ``stateOperators``, ``eventTime``, ``sources``, ...)."""
 
     def __init__(self):
         self.started: list[str] = []
@@ -188,7 +191,7 @@ class CollectingListener(StreamingQueryListener):
         self.started.append(str(event.id))
 
     def onQueryProgress(self, event):
-        self.progress.append({"id": str(event.progress.id), "numInputRows": event.progress.numInputRows})
+        self.progress.append(json.loads(event.progress.json))
 
     def onQueryIdle(self, event):
         pass

@@ -3,11 +3,13 @@ Structured Streaming with trigger(availableNow) — PySpark's
 TopologyTestDriver equivalent (SURVEY §3 EP3).
 """
 
+import functools
 import os
 import time
 import uuid
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_streams_demo_spark import KStream
@@ -31,6 +33,80 @@ def _as_stream(spark, df, tmp_path, name):
     path = str(tmp_path / f"{name}_{uuid.uuid4().hex[:6]}")
     df.write.parquet(path)
     return spark.readStream.schema(df.schema).parquet(path)
+
+
+def _batch_dirs(base_dir):
+    """The ``batch_id=N`` directory names under ``base_dir`` (none when
+    it does not exist yet)."""
+    if not os.path.isdir(base_dir):
+        return []
+    return [d for d in os.listdir(base_dir) if d.startswith("batch_id=")]
+
+
+def _newest_version(root, below=None):
+    """Newest ``v<batch_id>`` version under ``root`` (below ``below``
+    when given), or None."""
+    vs = [int(d[1:]) for d in os.listdir(root) if d.startswith("v")]
+    return max((v for v in vs if below is None or v < below), default=None)
+
+
+def _read_committed_or_empty(spark, base_dir, empty_schema):
+    """``read_committed``, or an empty frame before the first batch lands."""
+    if _batch_dirs(base_dir):
+        return read_committed(spark, base_dir)
+    return spark.createDataFrame([], empty_schema)
+
+
+def _committed_files(root):
+    """mtime of every file in a directory holding a ``_COMMITTED`` marker."""
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, files in os.walk(root) if "_COMMITTED" in files
+        for f in files
+    }
+
+
+def replay(spark, tmp_path, schema, batches, ingest):
+    """Drive ``ingest`` as the foreachBatch of an availableNow file stream
+    that receives ``batches`` (row lists in ``schema``, or DataFrames) one
+    parquet file at a time, all on one checkpoint; returns their union.
+
+    The first batch is driven, then retried: its ``commits/N`` entry is
+    deleted, so the next drive re-delivers batch id N — the failure after
+    the sink write and before the checkpoint commit. The retry must run
+    ``ingest`` for exactly that id and leave every directory the
+    idempotent sink marked committed untouched. Each later batch is driven
+    once. A second call with the same ``tmp_path`` resumes the same
+    source and checkpoint."""
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    delivered = []
+
+    def counted(df, batch_id):
+        delivered.append(batch_id)
+        ingest(df, batch_id)
+
+    def drive():
+        run_foreach_batch(
+            spark.readStream.schema(schema).parquet(in_dir), counted,
+            output_mode="append", checkpoint=ckpt, timeout_s=180,
+        )
+
+    dfs = [b if isinstance(b, DataFrame) else spark.createDataFrame(b, schema)
+           for b in batches]
+    for i, df in enumerate(dfs):
+        df.coalesce(1).write.mode("append").parquet(in_dir)
+        drive()
+        if i == 0:
+            n = max(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
+            for f in (str(n), f".{n}.crc"):
+                os.remove(f"{ckpt}/commits/{f}")
+            committed = _committed_files(str(tmp_path))
+            delivered.clear()
+            drive()
+            assert delivered == [n], f"retry delivered {delivered}, not [{n}]"
+            assert _committed_files(str(tmp_path)) == committed, \
+                "the retried batch rewrote a committed directory"
+    return functools.reduce(DataFrame.unionByName, dfs)
 
 
 def test_streaming_word_count_update_mode(spark, tmp_path):
@@ -148,17 +224,29 @@ def test_drive_past_timeout_stops_query_and_raises(spark, tmp_path, drive):
 
 
 def test_listener_and_cleanup(spark, tmp_path):
-    """StreamingQueryListener parity + cleanUp (checkpoint reset)."""
+    """StreamingQueryListener parity + cleanUp (checkpoint reset). The
+    listener keeps each progress event whole: a watermarked 10-minute
+    windowed count over events at 00:01, 00:02, 00:12 and 00:25 runs a
+    data batch (three open windows in state, the initial watermark),
+    then the no-data batch that advances the watermark to 00:25 minus
+    the 5-minute delay and evicts the two closed windows."""
     listener = CollectingListener()
     spark.streams.addListener(listener)
     try:
-        src = _as_stream(spark, fixtures.kv_string_stream(spark), tmp_path, "kv")
-        ckpt = str(tmp_path / "ckpt_listener")
-        out = run_available_now(
-            KStream(src).filter(lambda k, v: v != F.lit("value2")).to_df(),
-            output_mode="append",
-            checkpoint=ckpt,
+        events = spark.createDataFrame(
+            [("a", 1, f"2026-01-01 00:{m:02d}:00") for m in (1, 2, 12, 25)],
+            "key string, value long, ts string",
+        ).select("key", "value", F.col("ts").cast("timestamp").alias("timestamp"))
+        counts = (
+            KStream(_as_stream(spark, events, tmp_path, "events"))
+            .with_watermark("5 minutes")
+            .group_by_key()
+            .windowed_by(TimeWindows.of("10 minutes"))
+            .count()
         )
+        ckpt = str(tmp_path / "ckpt_listener")
+        name = f"wm_{uuid.uuid4().hex[:8]}"
+        out = run_available_now(counts, output_mode="append", name=name, checkpoint=ckpt)
         assert out.count() == 2
         deadline = time.time() + 30
         while time.time() < deadline and not listener.terminated:
@@ -169,6 +257,15 @@ def test_listener_and_cleanup(spark, tmp_path):
         assert not os.path.isdir(ckpt)
     finally:
         spark.streams.removeListener(listener)
+    progress = {p["batchId"]: p for p in listener.progress if p["name"] == name}
+    assert sorted(progress) == [0, 1]
+    data, no_data = progress[0], progress[1]
+    assert data["numInputRows"] == 4 and no_data["numInputRows"] == 0
+    assert data["durationMs"]["addBatch"] > 0
+    assert data["stateOperators"][0]["numRowsTotal"] == 3
+    assert data["eventTime"]["watermark"] == "1970-01-01T00:00:00.000Z"
+    assert no_data["stateOperators"][0]["numRowsTotal"] == 1
+    assert no_data["eventTime"]["watermark"] == "2026-01-01T00:20:00.000Z"
 
 
 def test_streaming_session_window_append(spark, tmp_path):
@@ -857,55 +954,37 @@ def test_incremental_ingest_stream_index_grows_once_per_batch(spark, tmp_path):
     directories ARE the growing index the next batch dedups against.
     Exactly-once both ways: a rerun on the same checkpoint adds nothing,
     a retried batch id overwrites instead of duplicating."""
-    import os
-
     from kafka_streams_demo_spark.functions.dedup import exact_dedup_incremental
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     index_dir = str(tmp_path / "index")
-    os.makedirs(index_dir)
     schema = "doc_id long, text string"
     sink = idempotent_parquet_sink(index_dir)
 
-    def current_index():
-        if any(d.startswith("batch_id=") for d in os.listdir(index_dir)):
-            return read_committed(spark, index_dir).select("text_hash")
-        return spark.createDataFrame([], "text_hash string")
-
     def ingest(batch, batch_id):
-        keep = exact_dedup_incremental(batch, current_index())
-        sink(keep, batch_id)
+        seen = _read_committed_or_empty(spark, index_dir, "text_hash string")
+        sink(exact_dedup_incremental(batch, seen), batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = spark.createDataFrame(
-        [(1, "alpha body"), (2, "beta body"), (3, "alpha body")], schema
-    )
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    b1 = replay(spark, tmp_path, schema,
+                [[(1, "alpha body"), (2, "beta body"), (3, "alpha body")]], ingest)
     idx1 = {(r["doc_id"], r["text_hash"])
             for r in read_committed(spark, index_dir).collect()}
     assert {d for d, _ in idx1} == {1, 2}  # in-batch dup 3 collapsed
-
-    run()  # same checkpoint, no new files: index unchanged
+    # the retried batch left the index unchanged
     assert read_committed(spark, index_dir).count() == 2
 
-    b2 = spark.createDataFrame(
-        [(4, "beta body"), (5, "gamma body")], schema
-    )
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    b2 = replay(spark, tmp_path, schema, [[(4, "beta body"), (5, "gamma body")]], ingest)
     idx2 = {(r["doc_id"], r["text_hash"])
             for r in read_committed(spark, index_dir).collect()}
     # batch 2 added ONLY the unseen hash: 4 deduped against batch 1's index
     assert {d for d, _ in idx2} == {1, 2, 5}
+    # doc ids ascend across batches, so the streamed keep-list equals one
+    # batch run over the union against an empty index
+    want = exact_dedup_incremental(
+        b1.unionByName(b2), spark.createDataFrame([], "text_hash string")
+    )
+    assert idx2 == {tuple(r) for r in want.collect()}
 
     # retried batch id overwrites its own directory — index stays put
-    committed = sorted(d for d in os.listdir(index_dir) if d.startswith("batch_id="))
+    committed = sorted(_batch_dirs(index_dir))
     assert len(committed) == 2  # one dir per non-empty source batch
     last_id = int(committed[-1].split("=")[1])
     sink(spark.createDataFrame([(99, "dup attempt")], schema)
@@ -913,6 +992,35 @@ def test_incremental_ingest_stream_index_grows_once_per_batch(spark, tmp_path):
          last_id)
     assert {d for d, _ in {(r["doc_id"], r["text_hash"])
             for r in read_committed(spark, index_dir).collect()}} == {1, 2, 5}
+
+
+def _keeplist_ingest(spark, tmp_path, prepare, **gate):
+    """An ingest running ``ingest_keeplist`` over ``prepare(batch)``
+    against the committed hash index, minhash index and corpus, which it
+    then extends through three idempotent sinks. Returns (ingest, dirs)."""
+    from kafka_streams_demo_spark.functions.dedup import (
+        ingest_keeplist,
+        minhash_index,
+    )
+    dirs = {n: str(tmp_path / n) for n in ("hashes", "mhidx", "corpus")}
+    sinks = {n: idempotent_parquet_sink(d) for n, d in dirs.items()}
+
+    def ingest(batch, batch_id):
+        docs = prepare(batch)
+        seen = _read_committed_or_empty(spark, dirs["hashes"], "doc_id long, text_hash string")
+        mh = _read_committed_or_empty(spark, dirs["mhidx"], "doc_id long, band int, bucket long")
+        corpus_old = _read_committed_or_empty(spark, dirs["corpus"], "doc_id long, text string")
+        keep = ingest_keeplist(
+            docs, seen.select("text_hash"), corpus_old.select("doc_id"),
+            index=mh.select("doc_id", "band", "bucket"),
+            corpus=corpus_old.unionByName(docs), n=3, threshold=0.5, **gate,
+        )
+        kept_docs = docs.join(keep.select("doc_id"), ["doc_id"], "left_semi")
+        sinks["hashes"](keep, batch_id)
+        sinks["mhidx"](minhash_index(kept_docs, n=3), batch_id)
+        sinks["corpus"](kept_docs, batch_id)
+
+    return ingest, dirs
 
 
 def test_ingest_keeplist_stream_full_pipeline(spark, tmp_path):
@@ -924,74 +1032,27 @@ def test_ingest_keeplist_stream_full_pipeline(spark, tmp_path):
     exact dup dies on the hash index, its near-dup dies on the minhash
     index, its short doc dies on the gate, and only the genuinely new
     doc lands everywhere."""
-    import os
-
-    from kafka_streams_demo_spark.functions.dedup import (
-        ingest_keeplist,
-        minhash_index,
-    )
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    dirs = {n: str(tmp_path / n) for n in ("hashes", "mhidx", "corpus")}
-    for d in dirs.values():
-        os.makedirs(d)
-    sinks = {n: idempotent_parquet_sink(d) for n, d in dirs.items()}
+    ingest, dirs = _keeplist_ingest(spark, tmp_path, lambda b: b, min_chars=10, min_words=5)
     schema = "doc_id long, text string"
-
-    def committed(name, empty_schema):
-        if any(x.startswith("batch_id=") for x in os.listdir(dirs[name])):
-            return read_committed(spark, dirs[name])
-        return spark.createDataFrame([], empty_schema)
-
-    def ingest(batch, batch_id):
-        seen = committed("hashes", "doc_id long, text_hash string").select("text_hash")
-        mh = committed("mhidx", "doc_id long, band int, bucket long").select(
-            "doc_id", "band", "bucket"
-        )
-        corpus_old = committed("corpus", schema)
-        keep = ingest_keeplist(
-            batch, seen, corpus_old.select("doc_id"),
-            index=mh, corpus=corpus_old.unionByName(batch),
-            n=3, threshold=0.5, min_chars=10, min_words=5,
-        )
-        kept_docs = batch.join(keep.select("doc_id"), ["doc_id"], "left_semi")
-        sinks["hashes"](keep, batch_id)
-        sinks["mhidx"](minhash_index(kept_docs, n=3), batch_id)
-        sinks["corpus"](kept_docs, batch_id)
-
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=180,
-        )
-
     body = lambda tag: " ".join(f"{tag}{i}" for i in range(10))  # noqa: E731
-    b1 = spark.createDataFrame(
-        [(1, body("a")), (2, body("b")), (3, body("a"))], schema
-    )
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    replay(spark, tmp_path, schema, [[(1, body("a")), (2, body("b")), (3, body("a"))]], ingest)
     assert {r["doc_id"] for r in read_committed(spark, dirs["corpus"]).collect()} == {1, 2}
 
-    b2 = spark.createDataFrame(
+    replay(spark, tmp_path, schema, [
         [(4, body("a")),                 # exact dup of committed 1
          (5, body("b") + " extra"),      # near-dup of committed 2
          (6, body("c")),                 # genuinely new → kept
          (7, "short")],                  # fails the quality gate
-        schema,
-    )
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    ], ingest)
     kept = {r["doc_id"] for r in read_committed(spark, dirs["corpus"]).collect()}
     assert kept == {1, 2, 6}
     # each sink committed exactly one directory per batch
     for name, d in dirs.items():
-        n = len([x for x in os.listdir(d) if x.startswith("batch_id=")])
+        n = len(_batch_dirs(d))
         assert n == 2, f"{name}: {n} committed dirs"
     # the minhash index holds band rows ONLY for kept docs
     assert {r["doc_id"] for r in read_committed(spark, dirs["mhidx"]).collect()} == {1, 2, 6}
-    # rerun on the same checkpoint: nothing grows
-    run()
+    # batch 2 was re-driven as a retry on the same checkpoint: nothing grew
     assert {r["doc_id"] for r in read_committed(spark, dirs["corpus"]).collect()} == {1, 2, 6}
 
 
@@ -1006,25 +1067,7 @@ def test_clean_then_ingest_stream_pipeline(spark, tmp_path):
     (dedup runs post-cleaning), a near-dup dies on the minhash index, a
     '{'-page dies on C4, a 3-word doc dies on Gopher, and the genuinely
     new doc lands in all three artifacts exactly once."""
-    import os
-
-    from kafka_streams_demo_spark.functions.dedup import (
-        ingest_keeplist,
-        minhash_index,
-    )
     from kafka_streams_demo_spark.functions.text import c4_line_clean, gopher_quality
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    dirs = {n: str(tmp_path / n) for n in ("hashes", "mhidx", "corpus")}
-    for d in dirs.values():
-        os.makedirs(d)
-    sinks = {n: idempotent_parquet_sink(d) for n, d in dirs.items()}
-    schema = "doc_id long, text string"
-
-    def committed(name, empty_schema):
-        if any(x.startswith("batch_id=") for x in os.listdir(dirs[name])):
-            return read_committed(spark, dirs[name])
-        return spark.createDataFrame([], empty_schema)
 
     def clean(batch):
         """C4 → Gopher over the cleaned text; returns (doc_id, text)."""
@@ -1041,59 +1084,31 @@ def test_clean_then_ingest_stream_pipeline(spark, tmp_path):
         ).select("doc_id", "keep")
         return flat.join(g, ["doc_id"]).filter("keep").select("doc_id", "text")
 
-    def ingest(batch, batch_id):
-        survivors = clean(batch)
-        seen = committed("hashes", "doc_id long, text_hash string").select("text_hash")
-        mh = committed("mhidx", "doc_id long, band int, bucket long").select(
-            "doc_id", "band", "bucket"
-        )
-        corpus_old = committed("corpus", schema)
-        keep = ingest_keeplist(
-            survivors, seen, corpus_old.select("doc_id"),
-            index=mh, corpus=corpus_old.unionByName(survivors),
-            n=3, threshold=0.5, min_chars=1, min_words=1,
-        )
-        kept_docs = survivors.join(keep.select("doc_id"), ["doc_id"], "left_semi")
-        sinks["hashes"](keep, batch_id)
-        sinks["mhidx"](minhash_index(kept_docs, n=3), batch_id)
-        sinks["corpus"](kept_docs, batch_id)
-
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=180,
-        )
-
+    ingest, dirs = _keeplist_ingest(spark, tmp_path, clean, min_chars=1, min_words=1)
+    schema = "doc_id long, text string"
     line = lambda tag: " ".join(f"{tag}{i}" for i in range(10)) + "."  # noqa: E731
-    b1 = spark.createDataFrame(
+    replay(spark, tmp_path, schema, [
         [(1, line("a")),
          (2, line("b")),
          (3, "junk line no punct\n" + line("a"))],  # cleans to doc 1's text
-        schema,
-    )
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    ], ingest)
     kept1 = {r["doc_id"] for r in read_committed(spark, dirs["corpus"]).collect()}
     assert kept1 == {1, 2}  # 3's cleaned text == 1's → in-batch exact dup
-
-    run()  # same checkpoint, no new files: nothing changes
+    # the retried batch changed nothing
     assert read_committed(spark, dirs["corpus"]).count() == 2
 
-    b2 = spark.createDataFrame(
+    replay(spark, tmp_path, schema, [
         [(4, "nav menu garbage\n" + line("a")),       # cleans to committed 1 → exact dup
          (5, " ".join(f"b{i}" for i in range(10)) + " extra."),  # near-dup of 2
          (6, "this page has { code fence."),           # C4 page-level drop
          (7, "tiny words here."),                      # 3 words → Gopher drop
          (8, line("z"))],                              # genuinely new → kept
-        schema,
-    )
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    ], ingest)
     kept2 = {r["doc_id"] for r in read_committed(spark, dirs["corpus"]).collect()}
     assert kept2 == {1, 2, 8}
     # exactly one committed dir per source batch in every artifact
     for name, d in dirs.items():
-        n = len([x for x in os.listdir(d) if x.startswith("batch_id=")])
+        n = len(_batch_dirs(d))
         assert n == 2, f"{name}: {n} committed dirs"
     # minhash index holds band rows only for kept docs
     idx_docs = {r["doc_id"] for r in read_committed(spark, dirs["mhidx"]).collect()}
@@ -1112,8 +1127,6 @@ def test_ivf_delta_ingest_stream_index_grows_once(spark, tmp_path):
     directories ARE the growing cell index. Rerun on the same
     checkpoint adds nothing, and the final index equals what a full
     batch rebuild with the same centroids would assign."""
-    import os
-
     from kafka_streams_demo_spark.functions.similarity import (
         ivf_assign,
         ivf_assign_delta,
@@ -1122,32 +1135,19 @@ def test_ivf_delta_ingest_stream_index_grows_once(spark, tmp_path):
     from kafka_streams_demo_spark.sources.registry import load_table
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     cents = ivf_centroids(emb).persist()
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     idx_dir = str(tmp_path / "cells")
-    os.makedirs(idx_dir)
     sink = idempotent_parquet_sink(idx_dir)
+    schema = "vec_id long, embedding array<float>"
 
     def ingest(batch, batch_id):
         sink(ivf_assign_delta(batch, cents).select("n_id", "cell"), batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = emb.filter(F.col("vec_id") < 30).select("vec_id", "embedding")
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    assert read_committed(spark, idx_dir).count() == 30
-    run()  # no new files → no growth
-    assert read_committed(spark, idx_dir).count() == 30
-    emb.filter((F.col("vec_id") >= 30) & (F.col("vec_id") < 80)).select(
-        "vec_id", "embedding"
-    ).coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    replay(spark, tmp_path, schema,
+           [emb.filter(F.col("vec_id") < 30).select("vec_id", "embedding")], ingest)
+    assert read_committed(spark, idx_dir).count() == 30  # the retry added nothing
+    replay(spark, tmp_path, schema, [emb.filter(
+        (F.col("vec_id") >= 30) & (F.col("vec_id") < 80)
+    ).select("vec_id", "embedding")], ingest)
     got = {(r["n_id"], r["cell"])
            for r in read_committed(spark, idx_dir).collect()}
     assert len(got) == 80
@@ -1168,37 +1168,17 @@ def test_lm_counts_stream_maintenance_exactly_once(spark, tmp_path):
     re-sum) reproduces the one-shot model over everything ingested,
     BIT-EQUAL — and a checkpoint rerun adds nothing. The streaming
     sibling of ccnet_perplexity_incremental's same-oracle proof."""
-    import os
-
     from kafka_streams_demo_spark.functions.lm import lm_counts, merge_lm_counts
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    cb_dir = str(tmp_path / "cb")
-    cu_dir = str(tmp_path / "cu")
-    os.makedirs(cb_dir)
-    os.makedirs(cu_dir)
-    schema = "doc_id long, text string"
-    cb_sink = idempotent_parquet_sink(cb_dir)
-    cu_sink = idempotent_parquet_sink(cu_dir)
+    cb_dir, cu_dir = str(tmp_path / "cb"), str(tmp_path / "cu")
+    cb_sink, cu_sink = idempotent_parquet_sink(cb_dir), idempotent_parquet_sink(cu_dir)
 
     def ingest(batch, batch_id):
         cb, cu = lm_counts(batch)
         cb_sink(cb, batch_id)
         cu_sink(cu, batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = spark.createDataFrame([(1, "a b a b"), (2, "b c")], schema)
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # rerun on the same checkpoint: nothing new committed
-    b2 = spark.createDataFrame([(3, "a b x y")], schema)
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    union = replay(spark, tmp_path, "doc_id long, text string",
+                   [[(1, "a b a b"), (2, "b c")], [(3, "a b x y")]], ingest)
 
     def compact():
         cb = read_committed(spark, cb_dir).groupBy("w1", "w2").agg(
@@ -1210,13 +1190,13 @@ def test_lm_counts_stream_maintenance_exactly_once(spark, tmp_path):
         return cb, cu
 
     got_cb, got_cu = compact()
-    want_cb, want_cu = lm_counts(b1.unionByName(b2))
+    want_cb, want_cu = lm_counts(union)
     assert sorted(map(tuple, got_cb.select("w1", "w2", "cb").collect())) == \
         sorted(map(tuple, want_cb.select("w1", "w2", "cb").collect()))
     assert sorted(map(tuple, got_cu.select("w", "cu").collect())) == \
         sorted(map(tuple, want_cu.select("w", "cu").collect()))
     # two non-empty source batches → exactly two committed partials each
-    assert len([d for d in os.listdir(cb_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(cb_dir)) == 2
     # merge_lm_counts over the committed partials is the same compaction
     parts = [compact(), (want_cb.limit(0), want_cu.limit(0))]
     mcb, mcu = merge_lm_counts(parts)
@@ -1230,37 +1210,20 @@ def test_hll_registers_stream_maintenance_exactly_once(spark, tmp_path):
     registers over everything ingested BIT-EQUAL (the streaming sibling
     of hll_merge_incremental's same-oracle proof), and a checkpoint
     rerun adds nothing."""
-    import os
-
     from kafka_streams_demo_spark.functions.sketches import hll_merge, hll_registers
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "regs")
-    os.makedirs(out_dir)
-    schema = "user_id long"
     sink = idempotent_parquet_sink(out_dir)
 
     def ingest(batch, batch_id):
         sink(hll_registers(batch, "user_id", p=7), batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = spark.createDataFrame([(i,) for i in range(60)], schema)
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun: no new partial
-    b2 = spark.createDataFrame([(i,) for i in range(40, 120)], schema)
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    union = replay(spark, tmp_path, "user_id long",
+                   [[(i,) for i in range(60)], [(i,) for i in range(40, 120)]], ingest)
 
     merged = hll_merge(read_committed(spark, out_dir).select("bucket", "register"))
-    want = hll_registers(b1.unionByName(b2), "user_id", p=7)
+    want = hll_registers(union, "user_id", p=7)
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, want.collect()))
-    assert len([d for d in os.listdir(out_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(out_dir)) == 2
 
 
 def test_scd2_merge_stream_versions(spark, tmp_path):
@@ -1272,26 +1235,15 @@ def test_scd2_merge_stream_versions(spark, tmp_path):
     merge loop end-to-end; the same-oracle catalog entry
     (scd2_merge_incremental) proves one fold externally."""
     import datetime as dt
-    import os
 
     from kafka_streams_demo_spark.functions.scd import scd2_merge, scd2_snapshot
 
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     dim_root = str(tmp_path / "dim")
     os.makedirs(dim_root)
-    schema = "k string, v long, ts timestamp, eid long"
-
-    def current_version():
-        vs = sorted(
-            int(d[1:]) for d in os.listdir(dim_root) if d.startswith("v")
-        )
-        return vs[-1] if vs else None
 
     def ingest(batch, batch_id):
-        cur_v = current_version()
         # only versions from EARLIER batches are inputs (rerun safety)
-        cur_v = max((v for v in [cur_v] if v is not None and v < batch_id), default=None)
+        cur_v = _newest_version(dim_root, below=batch_id)
         if cur_v is None:
             merged = scd2_snapshot(batch, ["k"], ["v"], "ts", "eid")
         else:
@@ -1299,31 +1251,16 @@ def test_scd2_merge_stream_versions(spark, tmp_path):
             merged = scd2_merge(cur, batch, ["k"], ["v"], "ts", "eid")
         merged.write.mode("overwrite").parquet(f"{dim_root}/v{batch_id}")
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
     def day(d):
         return dt.datetime(2024, 1, d)
 
-    b1 = spark.createDataFrame(
-        [("a", 1, day(1), 1), ("b", 5, day(2), 2), ("a", 2, day(3), 3)], schema
-    )
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    b2 = spark.createDataFrame(
-        [("a", 3, day(10), 4), ("c", 9, day(11), 5)], schema
-    )
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # rerun: no new version directories beyond the committed ones
+    union = replay(spark, tmp_path, "k string, v long, ts timestamp, eid long", [
+        [("a", 1, day(1), 1), ("b", 5, day(2), 2), ("a", 2, day(3), 3)],
+        [("a", 3, day(10), 4), ("c", 9, day(11), 5)],
+    ], ingest)
 
-    final = spark.read.parquet(f"{dim_root}/v{current_version()}")
-    want = scd2_snapshot(
-        b1.unionByName(b2), ["k"], ["v"], "ts", "eid"
-    )
+    final = spark.read.parquet(f"{dim_root}/v{_newest_version(dim_root)}")
+    want = scd2_snapshot(union, ["k"], ["v"], "ts", "eid")
     assert sorted(map(tuple, final.collect())) == sorted(map(tuple, want.collect()))
 
 
@@ -1335,39 +1272,22 @@ def test_kmv_sketch_stream_maintenance_exactly_once(spark, tmp_path):
     ingested EXACTLY (the k smallest of the union are always within the
     union of each side's k smallest), and a checkpoint rerun commits no
     new partial."""
-    import os
-
     from kafka_streams_demo_spark.functions.sketches import kmv_merge, kmv_sketch
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "kmv")
-    os.makedirs(out_dir)
-    schema = "user_id long"
     sink = idempotent_parquet_sink(out_dir)
 
     def ingest(batch, batch_id):
         sink(kmv_sketch(batch, "user_id", k=16), batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = spark.createDataFrame([(i,) for i in range(80)], schema)
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun: no new partial
-    b2 = spark.createDataFrame([(i,) for i in range(50, 160)], schema)
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    union = replay(spark, tmp_path, "user_id long",
+                   [[(i,) for i in range(80)], [(i,) for i in range(50, 160)]], ingest)
 
     merged = kmv_merge(16, read_committed(spark, out_dir).select("hv"))
-    want = kmv_sketch(b1.unionByName(b2), "user_id", k=16)
+    want = kmv_sketch(union, "user_id", k=16)
     assert sorted(r["hv"] for r in merged.collect()) == sorted(
         r["hv"] for r in want.collect()
     )
-    assert len([d for d in os.listdir(out_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(out_dir)) == 2
 
 
 def test_bm25_postings_stream_maintenance_exactly_once(spark, tmp_path):
@@ -1379,49 +1299,30 @@ def test_bm25_postings_stream_maintenance_exactly_once(spark, tmp_path):
     index of everything ingested (N/avgdl/df recovered from the combined
     postings, so corpus stats are always current); a checkpoint rerun
     appends nothing."""
-    import os
-
     from kafka_streams_demo_spark.functions.text import (
         bm25_postings,
         bm25_search_queries,
     )
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "postings")
-    os.makedirs(out_dir)
-    schema = "doc_id long, text string"
     sink = idempotent_parquet_sink(out_dir)
 
     def ingest(batch, batch_id):
         sink(bm25_postings(batch), batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = spark.createDataFrame(
+    union = replay(spark, tmp_path, "doc_id long, text string", [
         [(1, "the quick brown fox"), (2, "lazy dog sleeps"),
-         (3, "quick dog runs fast")], schema,
-    )
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun: nothing appended
-    b2 = spark.createDataFrame(
-        [(4, "brown dog barks"), (5, "fox jumps over the dog")], schema,
-    )
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+         (3, "quick dog runs fast")],
+        [(4, "brown dog barks"), (5, "fox jumps over the dog")],
+    ], ingest)
 
     qdf = spark.createDataFrame(
         [(1, "quick dog"), (2, "brown fox")], "query_id long, query_text string"
     )
     committed = read_committed(spark, out_dir).select("doc_id", "dl", "term", "tf")
     got = bm25_search_queries(None, qdf, k=3, postings=committed)
-    want = bm25_search_queries(b1.unionByName(b2), qdf, k=3)
+    want = bm25_search_queries(union, qdf, k=3)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    assert len([d for d in os.listdir(out_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(out_dir)) == 2
 
 
 def test_pq_codes_stream_maintenance_exactly_once(spark, tmp_path):
@@ -1431,10 +1332,6 @@ def test_pq_codes_stream_maintenance_exactly_once(spark, tmp_path):
     appends codes through the idempotent sink; ADC search over the
     committed codes equals search over a one-shot encode of everything
     ingested, and a checkpoint rerun appends nothing."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from kafka_streams_demo_spark.functions.pq import (
         pq_adc_topk,
         pq_encode,
@@ -1445,30 +1342,16 @@ def test_pq_codes_stream_maintenance_exactly_once(spark, tmp_path):
     emb.persist()
     cbs = pq_sample_codebooks(emb)
     cbs.persist().count()  # frozen codebooks — the production contract
-
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "codes")
-    os.makedirs(out_dir)
     sink = idempotent_parquet_sink(out_dir)
 
     def ingest(batch, batch_id):
         sink(pq_encode(batch, cbs), batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = emb.filter(F.col("vec_id") < 50).select("vec_id", "embedding")
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun: nothing appended
-    b2 = emb.filter(F.col("vec_id") >= 50).select("vec_id", "embedding")
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    replay(spark, tmp_path, "vec_id long, embedding array<float>", [
+        emb.filter(F.col("vec_id") < 50).select("vec_id", "embedding"),
+        emb.filter(F.col("vec_id") >= 50).select("vec_id", "embedding"),
+    ], ingest)
 
     queries = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -1477,7 +1360,7 @@ def test_pq_codes_stream_maintenance_exactly_once(spark, tmp_path):
     got = pq_adc_topk(committed, queries, cbs, topk=10)
     want = pq_adc_topk(pq_encode(emb, cbs), queries, cbs, topk=10)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    assert len([d for d in os.listdir(out_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(out_dir)) == 2
     emb.unpersist()
     cbs.unpersist()
 
@@ -1491,10 +1374,6 @@ def test_semdedup_verdict_stream_maintenance_exactly_once(spark, tmp_path):
     sink. The final committed table equals the sequential application
     of semdedup_cells_incremental over the batches, and a checkpoint
     rerun appends nothing."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from kafka_streams_demo_spark.functions.dedup import (
         semdedup_cells,
         semdedup_cells_incremental,
@@ -1509,10 +1388,7 @@ def test_semdedup_verdict_stream_maintenance_exactly_once(spark, tmp_path):
     cents.persist().count()  # frozen quantizer — the index contract
     v_seed = semdedup_cells(seed, threshold=tau, max_cell_size=None)
 
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "verdicts")
-    os.makedirs(out_dir)
     sink = idempotent_parquet_sink(out_dir)
     sink(v_seed, 0)  # seed verdicts = committed batch 0
 
@@ -1528,22 +1404,11 @@ def test_semdedup_verdict_stream_maintenance_exactly_once(spark, tmp_path):
             batch_id + 1,  # 0 is the seed
         )
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
     b2 = emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100)).select(
         "vec_id", "embedding"
     )
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun: nothing appended
     b3 = emb.filter(F.col("vec_id") >= 100).select("vec_id", "embedding")
-    b3.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    replay(spark, tmp_path, "vec_id long, embedding array<float>", [b2, b3], ingest)
 
     got = read_committed(spark, out_dir).select("vec_id", "cell", "ccos", "kept")
     v2 = semdedup_cells_incremental(
@@ -1555,7 +1420,7 @@ def test_semdedup_verdict_stream_maintenance_exactly_once(spark, tmp_path):
     )
     want = v_seed.unionByName(v2).unionByName(v3)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    assert len([d for d in os.listdir(out_dir) if d.startswith("batch_id=")]) == 3
+    assert len(_batch_dirs(out_dir)) == 3
     emb.unpersist()
     cents.unpersist()
 
@@ -1567,10 +1432,6 @@ def test_pq_residual_codes_stream_maintenance_exactly_once(spark, tmp_path):
     vectors and appends through the idempotent sink; the committed codes
     equal a one-shot residual encode of everything ingested, and a
     checkpoint rerun appends nothing."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from kafka_streams_demo_spark.functions.pq import (
         pq_encode,
         pq_residual_frame,
@@ -1585,38 +1446,24 @@ def test_pq_residual_codes_stream_maintenance_exactly_once(spark, tmp_path):
         pq_residual_frame(emb, cents), vec_col="rvec"
     )
     cbs.persist().count()  # frozen codebooks
-
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "codes")
-    os.makedirs(out_dir)
     sink = idempotent_parquet_sink(out_dir)
 
     def ingest(batch, batch_id):
         rv = pq_residual_frame(batch, cents)
         sink(pq_encode(rv, cbs, vec_col="rvec", keep_cols=("cell",)), batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = emb.filter(F.col("vec_id") < 50).select("vec_id", "embedding")
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun: nothing appended
-    b2 = emb.filter(F.col("vec_id") >= 50).select("vec_id", "embedding")
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    replay(spark, tmp_path, "vec_id long, embedding array<float>", [
+        emb.filter(F.col("vec_id") < 50).select("vec_id", "embedding"),
+        emb.filter(F.col("vec_id") >= 50).select("vec_id", "embedding"),
+    ], ingest)
 
     got = read_committed(spark, out_dir).select("vec_id", "cell", "sub", "code")
     want = pq_encode(
         pq_residual_frame(emb, cents), cbs, vec_col="rvec", keep_cols=("cell",)
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    assert len([d for d in os.listdir(out_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(out_dir)) == 2
     emb.unpersist()
     cbs.unpersist()
 
@@ -1628,41 +1475,25 @@ def test_cms_sketch_stream_maintenance_exactly_once(spark, tmp_path):
     cms_merge over the committed partials equals the one-shot sketch
     over everything ingested EXACTLY (counters are linear), and a
     checkpoint rerun commits no new partial."""
-    import os
-
     from kafka_streams_demo_spark.functions.sketches import cms_merge, cms_sketch
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "cms")
-    os.makedirs(out_dir)
-    schema = "user_id long"
     sink = idempotent_parquet_sink(out_dir)
 
     def ingest(batch, batch_id):
         sink(cms_sketch(batch, "user_id", depth=3, width=64), batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = spark.createDataFrame([(i % 37,) for i in range(200)], schema)
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun: no new partial
-    b2 = spark.createDataFrame([(i % 61,) for i in range(150)], schema)
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    union = replay(spark, tmp_path, "user_id long", [
+        [(i % 37,) for i in range(200)], [(i % 61,) for i in range(150)],
+    ], ingest)
 
     merged = cms_merge(
         read_committed(spark, out_dir).select("row", "bucket", "cnt")
     )
-    want = cms_sketch(b1.unionByName(b2), "user_id", depth=3, width=64)
+    want = cms_sketch(union, "user_id", depth=3, width=64)
     assert sorted(map(tuple, merged.collect())) == sorted(
         map(tuple, want.collect())
     )
-    assert len([d for d in os.listdir(out_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(out_dir)) == 2
 
 
 def test_substring_index_stream_maintenance_exactly_once(spark, tmp_path):
@@ -1672,59 +1503,35 @@ def test_substring_index_stream_maintenance_exactly_once(spark, tmp_path):
     documents; substring search over the committed index equals search
     over a one-shot index of everything ingested, and a checkpoint
     rerun appends nothing."""
-    import os
-
     from kafka_streams_demo_spark.functions.text import (
         char_gram_index,
         substring_find,
     )
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "grams")
-    os.makedirs(out_dir)
-    schema = "doc_id long, text string"
     sink = idempotent_parquet_sink(out_dir)
 
     def ingest(batch, batch_id):
         sink(char_gram_index(batch, n=4), batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = spark.createDataFrame(
+    union = replay(spark, tmp_path, "doc_id long, text string", [
         [(1, "full table scan over parquet"), (2, "table scan with pruning")],
-        schema,
-    )
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun: nothing appended
-    b2 = spark.createDataFrame(
         [(3, "no scan here at all... table scan again"), (4, "unrelated text")],
-        schema,
-    )
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    ], ingest)
 
     committed = read_committed(spark, out_dir).select("doc_id", "gram", "pos")
     got = substring_find(None, "table scan", n=4, index=committed)
-    want = substring_find(b1.unionByName(b2), "table scan", n=4)
+    want = substring_find(union, "table scan", n=4)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    assert len([d for d in os.listdir(out_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(out_dir)) == 2
 
 
 def _docs_before(spark, docs_root, batch_id, schema):
     """Union of doc batches committed by EARLIER batch ids (rerun-safe:
     the current batch's own prior half-write never feeds itself)."""
-    import os
-
     dirs = [
         os.path.join(docs_root, d)
-        for d in os.listdir(docs_root)
-        if d.startswith("batch_id=")
-        and int(d.split("=")[1]) < batch_id
+        for d in _batch_dirs(docs_root)
+        if int(d.split("=")[1]) < batch_id
         and os.path.exists(os.path.join(docs_root, d, "_COMMITTED"))
     ]
     if not dirs:
@@ -1741,18 +1548,11 @@ def test_ngram_jaccard_incremental_stream_drive_exactly_once(spark, tmp_path):
     later-arriving member, so the UNION of committed pair-batches
     equals the one-shot batch pairs over everything — and a checkpoint
     rerun commits nothing new."""
-    import os
-
     from kafka_streams_demo_spark.functions.dedup import (
         ngram_jaccard_pairs,
         ngram_jaccard_pairs_incremental,
     )
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    pairs_dir = str(tmp_path / "pairs")
-    docs_dir = str(tmp_path / "docs")
-    os.makedirs(pairs_dir)
-    os.makedirs(docs_dir)
+    pairs_dir, docs_dir = str(tmp_path / "pairs"), str(tmp_path / "docs")
     schema = "doc_id long, text string"
     pair_sink = idempotent_parquet_sink(pairs_dir)
     doc_sink = idempotent_parquet_sink(docs_dir)
@@ -1767,36 +1567,19 @@ def test_ngram_jaccard_incremental_stream_drive_exactly_once(spark, tmp_path):
         )
         doc_sink(batch, batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = spark.createDataFrame(
+    union = replay(spark, tmp_path, schema, [
         [(1, "the quick brown fox jumps over the lazy dog"),
          (2, "the quick brown fox jumps over the lazy cat"),
          (5, "something entirely different here")],
-        schema,
-    )
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun: nothing committed twice
-    b2 = spark.createDataFrame(
         [(3, "the quick brown fox jumps over the lazy dog"),
          (4, "something entirely different here too")],
-        schema,
-    )
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    ], ingest)
 
     got = read_committed(spark, pairs_dir).select("i", "j", "jaccard")
-    want = ngram_jaccard_pairs(
-        b1.unionByName(b2), n=3, threshold=0.5, max_doc_freq=None
-    )
+    want = ngram_jaccard_pairs(union, n=3, threshold=0.5, max_doc_freq=None)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     assert len(want.collect()) > 0
-    assert len([d for d in os.listdir(pairs_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(pairs_dir)) == 2
 
 
 def test_embedding_cosine_incremental_stream_drive_exactly_once(spark, tmp_path):
@@ -1806,19 +1589,12 @@ def test_embedding_cosine_incremental_stream_drive_exactly_once(spark, tmp_path)
     the union of committed pair-batches equals the one-shot
     embedding_cosine_pairs over everything ingested (every pair is
     emitted by its later member's batch exactly once)."""
-    import os
-
     from kafka_streams_demo_spark.functions.dedup import (
         embedding_cosine_pairs,
         embedding_cosine_pairs_incremental,
     )
     from kafka_streams_demo_spark.sources import load_table
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    pairs_dir = str(tmp_path / "pairs")
-    vecs_dir = str(tmp_path / "vecs")
-    os.makedirs(pairs_dir)
-    os.makedirs(vecs_dir)
+    pairs_dir, vecs_dir = str(tmp_path / "pairs"), str(tmp_path / "vecs")
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     schema = "vec_id long, embedding array<float>, label int"
     pair_sink = idempotent_parquet_sink(pairs_dir)
@@ -1832,25 +1608,16 @@ def test_embedding_cosine_incremental_stream_drive_exactly_once(spark, tmp_path)
         )
         vec_sink(batch, batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = emb.filter(F.col("vec_id") < 60)
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun
-    b2 = emb.filter((F.col("vec_id") >= 60) & (F.col("vec_id") < 120))
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    union = replay(spark, tmp_path, schema, [
+        emb.filter(F.col("vec_id") < 60),
+        emb.filter((F.col("vec_id") >= 60) & (F.col("vec_id") < 120)),
+    ], ingest)
 
     got = read_committed(spark, pairs_dir).select("i", "j", "cos")
-    want = embedding_cosine_pairs(b1.unionByName(b2), threshold=0.35)
+    want = embedding_cosine_pairs(union, threshold=0.35)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     assert len(want.collect()) > 0
-    assert len([d for d in os.listdir(pairs_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(pairs_dir)) == 2
 
 
 def test_dedup_clusters_incremental_stream_drive(spark, tmp_path):
@@ -1861,15 +1628,11 @@ def test_dedup_clusters_incremental_stream_drive(spark, tmp_path):
     pattern — reruns overwrite the same version with the same content).
     The final version equals one-shot dedup_clusters over all docs and
     all pairs, exercising root takeover and cross-batch bridging."""
-    import os
-
     from kafka_streams_demo_spark.functions.dedup import (
         dedup_clusters,
         dedup_clusters_incremental,
     )
 
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     asg_root = str(tmp_path / "asg")
     os.makedirs(asg_root)
     schema = "doc_id long"
@@ -1878,15 +1641,8 @@ def test_dedup_clusters_incremental_stream_drive(spark, tmp_path):
     # takeover (new id 0 undercuts old cluster minimum 9)
     all_pairs = [(1, 2), (2, 3), (5, 6), (4, 7), (0, 9)]
 
-    def current_version():
-        vs = sorted(int(d[1:]) for d in os.listdir(asg_root) if d.startswith("v"))
-        return vs[-1] if vs else None
-
     def ingest(batch, batch_id):
-        cur_v = current_version()
-        cur_v = max(
-            (v for v in [cur_v] if v is not None and v < batch_id), default=None
-        )
+        cur_v = _newest_version(asg_root, below=batch_id)
         batch_ids = {r["doc_id"] for r in batch.collect()}
         if cur_v is None:
             seen: set = set()
@@ -1906,29 +1662,18 @@ def test_dedup_clusters_incremental_stream_drive(spark, tmp_path):
         merged = dedup_clusters_incremental(batch, cur, new_pairs)
         merged.write.mode("overwrite").parquet(f"{asg_root}/v{batch_id}")
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = spark.createDataFrame([(1,), (2,), (5,), (9,)], schema)
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # rerun: no new version directories
-    v_after_rerun = current_version()
-    b2 = spark.createDataFrame([(0,), (3,), (4,), (6,), (7,), (8,)], schema)
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    b1 = replay(spark, tmp_path, schema, [[(1,), (2,), (5,), (9,)]], ingest)
+    v_after_rerun = _newest_version(asg_root)  # the retry wrote no new version
+    b2 = replay(spark, tmp_path, schema, [[(0,), (3,), (4,), (6,), (7,), (8,)]], ingest)
 
     all_docs = b1.unionByName(b2)
     pairs_df = spark.createDataFrame(all_pairs, "i long, j long")
     want = dedup_clusters(all_docs, pairs_df)
-    final = spark.read.parquet(f"{asg_root}/v{current_version()}")
+    final = spark.read.parquet(f"{asg_root}/v{_newest_version(asg_root)}")
     assert sorted(map(tuple, final.collect())) == sorted(map(tuple, want.collect()))
     # root takeover happened: 9's cluster is now rooted at 0
     assert [r["cluster_id"] for r in final.filter(F.col("doc_id") == 9).collect()] == [0]
-    assert current_version() > v_after_rerun
+    assert _newest_version(asg_root) > v_after_rerun
 
 
 def test_compaction_apply_stream_maintenance(spark, tmp_path):
@@ -1941,7 +1686,6 @@ def test_compaction_apply_stream_maintenance(spark, tmp_path):
     exactly one data file per plan group, and re-running the compaction
     overwrites to the identical layout (idempotent maintenance)."""
     import glob
-    import os
 
     from kafka_streams_demo_spark.functions.layout import (
         compaction_apply,
@@ -1949,41 +1693,20 @@ def test_compaction_apply_stream_maintenance(spark, tmp_path):
         content_manifest,
     )
 
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     raw_root = str(tmp_path / "raw")
     out = str(tmp_path / "compacted")
-    os.makedirs(raw_root)
-    schema = "part string, seq long, payload string"
+    sink = idempotent_parquet_sink(raw_root)
 
     def ingest(batch, batch_id):
-        dest = os.path.join(raw_root, f"file={batch_id}")
-        if os.path.exists(os.path.join(dest, "_COMMITTED")):
-            return
-        batch.withColumn("file_id", F.lit(batch_id).cast("long")) \
-            .write.mode("overwrite").parquet(dest)
-        open(os.path.join(dest, "_COMMITTED"), "w").close()
+        sink(batch.withColumn("file_id", F.lit(batch_id).cast("long")), batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    for b, rows in enumerate([
+    replay(spark, tmp_path, "part string, seq long, payload string", [
         [("a", 1, "x1"), ("a", 2, "x2"), ("b", 1, "y1")],
         [("a", 3, "x3"), ("b", 2, "y2")],
         [("a", 4, "x4"), ("b", 3, "y3"), ("b", 4, "y4")],
-    ]):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.mode("append").parquet(in_dir)
-        run()
+    ], ingest)
 
-    committed = [
-        d for d in os.listdir(raw_root)
-        if os.path.exists(os.path.join(raw_root, d, "_COMMITTED"))
-    ]
-    data = spark.read.parquet(*[os.path.join(raw_root, d) for d in committed])
+    data = read_committed(spark, raw_root)
     files = data.groupBy("part", "file_id").agg(
         (F.count(F.lit(1)) * 100).alias("bytes")
     )
@@ -2015,44 +1738,27 @@ def test_quantile_sketch_stream_maintenance_exactly_once(spark, tmp_path):
     the merge over committed partials equals the one-shot sketch over
     everything ingested EXACTLY, and a checkpoint rerun commits no new
     partial."""
-    import os
-
     from kafka_streams_demo_spark.functions.sketches import (
         quantile_sketch,
         quantile_sketch_merge,
     )
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "qsk")
-    os.makedirs(out_dir)
-    schema = "event_id long, value double"
     sink = idempotent_parquet_sink(out_dir)
 
     def ingest(batch, batch_id):
         sink(quantile_sketch(batch, "value", "event_id", k=32), batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    b1 = spark.createDataFrame([(i, float(i * 7 % 100)) for i in range(60)], schema)
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun: no new partial
-    b2 = spark.createDataFrame(
-        [(i, float(i * 3 % 50)) for i in range(60, 150)], schema
-    )
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    union = replay(spark, tmp_path, "event_id long, value double", [
+        [(i, float(i * 7 % 100)) for i in range(60)],
+        [(i, float(i * 3 % 50)) for i in range(60, 150)],
+    ], ingest)
 
     merged = quantile_sketch_merge(
         32, read_committed(spark, out_dir).select("hv", "v")
     )
-    want = quantile_sketch(b1.unionByName(b2), "value", "event_id", k=32)
+    want = quantile_sketch(union, "value", "event_id", k=32)
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, want.collect()))
-    assert len([d for d in os.listdir(out_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(out_dir)) == 2
 
 
 def test_session_window_suppress_stream_finals_once_and_late_expiry(spark, tmp_path):
@@ -2148,48 +1854,24 @@ def test_nb_classifier_stream_maintenance_exactly_once(spark, tmp_path):
     + 1-row doc-count partial through the idempotent sink; the merged
     model scores docs bit-identically to a one-shot retrain over
     everything ingested, and a checkpoint rerun commits no new partial."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from kafka_streams_demo_spark.functions.lm import (
         nb_model_counts,
         nb_quality_scores,
     )
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    bc_dir = str(tmp_path / "bc")
-    dc_dir = str(tmp_path / "dc")
-    os.makedirs(bc_dir)
-    os.makedirs(dc_dir)
-    schema = "doc_id long, text string, label int"
-    bc_sink = idempotent_parquet_sink(bc_dir)
-    dc_sink = idempotent_parquet_sink(dc_dir)
+    bc_dir, dc_dir = str(tmp_path / "bc"), str(tmp_path / "dc")
+    bc_sink, dc_sink = idempotent_parquet_sink(bc_dir), idempotent_parquet_sink(dc_dir)
 
     def ingest(batch, batch_id):
         bc, dc = nb_model_counts(batch, F.col("label") == 1)
         bc_sink(bc, batch_id)
         dc_sink(dc, batch_id)
 
-    def run():
-        run_foreach_batch(
-            spark.readStream.schema(schema).parquet(in_dir),
-            ingest, output_mode="append", checkpoint=ckpt, timeout_s=120,
-        )
-
-    rows1 = [(i, "clean curated prose", 1) for i in range(10)] + [
-        (i, "spam junk clicks", 0) for i in range(10, 30)
-    ]
-    b1 = spark.createDataFrame(rows1, schema)
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
-    run()  # checkpoint rerun: no new partial
-    rows2 = [(i, "curated clean text", 1) for i in range(30, 45)] + [
-        (i, "junk spam noise", 0) for i in range(45, 60)
-    ]
-    b2 = spark.createDataFrame(rows2, schema)
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    run()
+    all_docs = replay(spark, tmp_path, "doc_id long, text string, label int", [
+        [(i, "clean curated prose", 1) for i in range(10)]
+        + [(i, "spam junk clicks", 0) for i in range(10, 30)],
+        [(i, "curated clean text", 1) for i in range(30, 45)]
+        + [(i, "junk spam noise", 0) for i in range(45, 60)],
+    ], ingest)
 
     # compact the committed partials by re-sum (merge_nb_counts'
     # union+re-sum applied to the sink's accumulated rows)
@@ -2201,13 +1883,12 @@ def test_nb_classifier_stream_maintenance_exactly_once(spark, tmp_path):
     merged_dc = read_committed(spark, dc_dir).agg(
         F.sum("d_pos").alias("d_pos"), F.sum("d_neg").alias("d_neg")
     )
-    all_docs = b1.unionByName(b2)
     via_stream = nb_quality_scores(all_docs, counts=(merged_bc, merged_dc))
     retrain = nb_quality_scores(all_docs, F.col("label") == 1)
     assert sorted(map(tuple, via_stream.collect())) == sorted(
         map(tuple, retrain.collect())
     )
-    assert len([d for d in os.listdir(bc_dir) if d.startswith("batch_id=")]) == 2
+    assert len(_batch_dirs(bc_dir)) == 2
 
 
 def test_wallclock_drive_punctuation_multiplicity(spark):
